@@ -20,4 +20,12 @@ Layout:
     pipeline   — the batch runner replacing the reference's Airflow DAGs
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# Untracked working space for bench indexes and catalog side effects: the
+# checkout's .scratch/ (git-ignored), wherever the checkout lives.
+SCRATCH_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)

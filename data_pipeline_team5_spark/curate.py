@@ -10,8 +10,9 @@ tests/test_incremental_neardup, tests/test_curate_cli):
                the backfill / first-build path
   init-corpus  seed the MAINTAINED retained-corpus root from a documents
                parquet, written as an idempotent ``batch_id`` partition
-  build-index  materialize the retained corpus's MinHash signature table
-               and exact-dedup key table (idempotent per-batch partitions;
+  build-index  materialize the retained corpus's MinHash signature table,
+               exact-dedup key table and, per modality given, payload
+               hash index (idempotent per-batch partitions;
                ``--batch-id`` defaults to "base" so the root is always
                fold-safe)
   incremental  curate ONE daily batch against the stored indexes —
@@ -54,21 +55,31 @@ tests/test_incremental_neardup, tests/test_curate_cli):
                manifest (docs, id checksum) as the reproducibility audit;
                rerunning produces byte-identical shards
 
-The fold step grows all THREE stores together — signature index, key
-index, AND the retained-corpus root — because an index that knows docs the
-corpus no longer carries makes tomorrow's verify stage silently keep
-near-dups of folded survivors (ADVICE r6 #1; the runtime guard lives in
-``neardup_incremental_against_index``). It also switches ``--out`` into a
-maintained assignments root: each day lands as its own ``batch_id``
-partition with ``bin_id`` offset past every previous batch's max
-(``pipeline.next_bin_offset``), so bin ids stay globally unique across the
-accumulated days and a replayed day reproduces its own partition bitwise.
+The fold step grows all stores together — signature index, key index,
+every payload hash index, AND the retained-corpus root — because an
+index that knows docs the corpus no longer carries makes tomorrow's
+verify stage silently keep near-dups of folded survivors (the runtime
+guard lives in ``neardup_incremental_against_index``). It also switches
+``--out`` into a maintained assignments root: each day lands as its own
+``batch_id`` partition with ``bin_id`` offset past every previous batch's
+max (``pipeline.next_bin_offset``), so bin ids stay globally unique across
+the accumulated days and a replayed day reproduces its own partition
+bitwise.
 
 A fold loop therefore requires every root it appends to — corpus, sig,
 key — to be ``batch_id=``-partitioned from day 0 (parquet cannot mix flat
 data files and partition directories under one root); ``init-corpus`` and
 ``build-index``'s default batch id give you that, and the fold step
 REFUSES a root that contains flat data files instead of corrupting it.
+
+Payload modalities come from one table, ``operators/multimodal.py:
+MODALITIES`` (image, audio, video), and every per-modality flag is built
+from it: ``--<m>-blobs`` (a (doc_id, blob) parquet), ``--<m>-benchmark``
+(eval payloads to decontaminate against), the stored hash index
+(``--<index>-index``; build-index calls the image index
+``--perceptual``) and, where the table lists decode choices,
+``--<m>-backend``. Blobs in `incremental`/`stream` need the index or a
+benchmark (decon-only), and a fold grows every index given.
 
 Each run writes parquet and prints ONE JSON summary line (rows kept,
 paths), cron-friendly like pipeline.main.
@@ -79,6 +90,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
+
+from data_pipeline_team5_spark.operators.multimodal import MODALITIES, Modality
 
 
 def _refuse_flat_root(path: str, what: str) -> None:
@@ -132,18 +146,23 @@ def _write_fold_manifest(out_root: str, fold: str, payload: dict) -> None:
 
 def _quality_drift_probe(
     new,
-    frozen_quality: dict,
+    frozen_quality: dict | None,
     bench_docs,
     decon_bloom_min_grams,
     bench_gram_count,
     decon_n: int,
-) -> tuple[dict, dict]:
+    who: str,
+) -> tuple[dict, dict] | None:
     """(drift, hot): per-signal TV of a batch's score distribution vs
     the frozen model's stored snapshot, over the batch's filter-stage
     pool (the same pool the full-run snapshot was taken over, with the
     same knobs) — shared by the incremental and stream paths so the
     guard cannot diverge between them. ``hot`` is the over-threshold
-    subset."""
+    subset, and a non-empty one warns on stderr about ``who``: a stale
+    or mismatched model is FLAGGED, never silently applied. None when
+    there is no frozen model with a score snapshot."""
+    if frozen_quality is None or not frozen_quality.get("score_hist"):
+        return None
     from data_pipeline_team5_spark.operators.quality import (
         QUALITY_DRIFT_WARN_TV,
         quality_score_drift,
@@ -165,6 +184,15 @@ def _quality_drift_probe(
         for s, tv in drift.items()
         if tv is not None and tv > QUALITY_DRIFT_WARN_TV
     }
+    if hot:
+        print(
+            f"WARNING: frozen quality model looks stale for {who} — "
+            f"score-distribution TV {hot} exceeds {QUALITY_DRIFT_WARN_TV} "
+            "vs the full run's snapshot (refit via `full "
+            "--quality-model-out`, or confirm the batch really is from a "
+            "shifted source)",
+            file=sys.stderr,
+        )
     return drift, hot
 
 
@@ -221,23 +249,103 @@ def _langid_mixture_probe(
     return mixture, tv, tv is not None and tv > LANGID_DRIFT_WARN_TV
 
 
-def main(argv: list[str] | None = None) -> int:
-    from data_pipeline_team5_spark.pipeline import (
-        append_corpus_batch,
-        build_exact_key_index,
-        build_perceptual_index,
-        build_signature_index,
-        compact_fold_stores,
-        curate_incremental_batch,
-        curate_training_data,
-        next_bin_offset,
-    )
-    from data_pipeline_team5_spark.operators.dedup import (
-        benchmark_gram_count,
-    )
-    from data_pipeline_team5_spark.session import get_spark
-    from pyspark.sql import functions as F
+def _index_flag(m: Modality, cmd: str) -> str:
+    """A modality's stored-index flag: ``--<index>-index``, except that
+    build-index names the image index ``--perceptual``."""
+    if cmd == "build-index" and m.name == "image":
+        return "--perceptual"
+    return f"--{m.index}-index"
 
+
+def _arg(args: argparse.Namespace, flag: str):
+    """The parsed value of ``flag``; None where the subcommand lacks it."""
+    return getattr(args, flag.lstrip("-").replace("-", "_"), None)
+
+
+def _add_modality_flags(p: argparse.ArgumentParser, cmd: str) -> None:
+    """One subcommand's per-modality flags, from the modality table:
+    ``--<m>-blobs`` everywhere; the stored-index flag except in ``full``;
+    ``--<m>-benchmark`` except in build-index; ``--<m>-backend`` where
+    the table lists decode choices."""
+    for m in MODALITIES.values():
+        blobs, bench = f"--{m.name}-blobs", f"--{m.name}-benchmark"
+        index = _index_flag(m, cmd)
+        if cmd == "full":
+            p.add_argument(blobs, default=None,
+                           help=f"(doc_id, blob) parquet of the corpus's "
+                                f"{m.noun}: perceptual near-dup pairs "
+                                "union into the dedup component graph, "
+                                "so duplicate docs collapse under the "
+                                "same --survivor-policy as text near-dups")
+        elif cmd == "build-index":
+            p.add_argument(blobs, default=None,
+                           help=f"with {index}: (doc_id, blob) parquet to "
+                                f"hash into the {m.name} index (one decode "
+                                "pass — the cost the daily loop never "
+                                "repays)")
+            p.add_argument(index, default=None,
+                           help=f"{m.name}-hash index path (2 BIGINTs/"
+                                f"doc); requires {blobs}")
+        else:
+            p.add_argument(blobs, default=None,
+                           help=f"(doc_id, blob) parquet of the new "
+                                f"docs' {m.noun}; requires {index} and/or "
+                                f"{bench}. Deduped against the retained "
+                                "corpus through the stored hash index — "
+                                "the corpus's payloads are never decoded "
+                                "again")
+            p.add_argument(index, default=None,
+                           help=f"{m.name}-hash index root (seed with "
+                                f"build-index {_index_flag(m, 'build-index')}"
+                                "); each fold adds its survivors' hashes")
+        if cmd != "build-index":
+            p.add_argument(bench, default=None,
+                           help=f"(doc_id, blob) parquet of an eval "
+                                f"benchmark's {m.noun}: docs whose payload "
+                                "is a near-dup of any benchmark payload "
+                                "are dropped before dedup (the payload "
+                                f"twin of --benchmark). Requires {blobs}; "
+                                "without an index the batch is "
+                                "decontaminated only")
+        if m.backends:
+            p.add_argument(f"--{m.name}-backend", default=m.backend,
+                           choices=list(m.backends),
+                           help=f"decode backend for {blobs} "
+                                "(operators/multimodal.py)")
+
+
+def _modality_kwargs(
+    args: argparse.Namespace, blobs: dict, bench_blobs: dict, batch: bool
+) -> dict:
+    """The preset kwargs for every modality: ``<m>_blobs`` or, for the
+    incremental preset (``batch``), ``new_<m>_blobs`` plus the index
+    path; the benchmark blobs; the backend where there is a flag."""
+    kw: dict = {}
+    for m in MODALITIES.values():
+        if batch:
+            kw[f"new_{m.name}_blobs"] = blobs[m.name]
+            kw[f"{m.index}_index_path"] = _arg(args, _index_flag(m, args.cmd))
+        else:
+            kw[f"{m.name}_blobs"] = blobs[m.name]
+        kw[f"benchmark_{m.name}_blobs"] = bench_blobs[m.name]
+        if m.backends:
+            kw[f"{m.name}_backend"] = _arg(args, f"--{m.name}-backend")
+    return kw
+
+
+def _refuse_fold_roots(args: argparse.Namespace) -> None:
+    """Refuse every root a fold appends to, before any work is done."""
+    roots = [(args.corpus, "corpus"), (args.sig, "sig"),
+             (args.key, "key"), (args.out, "out")]
+    for m in MODALITIES.values():
+        flag = _index_flag(m, args.cmd)
+        if _arg(args, flag):
+            roots.append((_arg(args, flag), flag[2:]))
+    for path, what in roots:
+        _refuse_flat_root(path, what)
+
+
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="data_pipeline_team5_spark.curate")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -343,54 +451,7 @@ def main(argv: list[str] | None = None) -> int:
                         help="comma-separated source names, best first "
                              "(source_rank policy); unlisted sources rank "
                              "equal-worst")
-    p_full.add_argument("--image-blobs", default=None,
-                        help="(doc_id, blob) parquet for corpora with an "
-                             "image column: perceptual near-dup pairs "
-                             "(aHash/dHash) union into the dedup "
-                             "component graph, so image-duplicate docs "
-                             "collapse under the same --survivor-policy "
-                             "as text near-dups")
-    p_full.add_argument("--image-backend", default="bmp",
-                        choices=["bmp", "png", "fake", "pil"],
-                        help="image decode backend for --image-blobs "
-                             "(bmp/png = real stdlib decodes; pil is gated in "
-                             "containers without imaging libs)")
-    p_full.add_argument("--audio-blobs", default=None,
-                        help="(doc_id, blob) parquet for corpora with an "
-                             "audio column (round 16): WAV energy-"
-                             "envelope near-dup pairs union into the "
-                             "dedup component graph, same contract as "
-                             "--image-blobs")
-    p_full.add_argument("--audio-benchmark", default=None,
-                        help="(doc_id, blob) WAV parquet of an eval "
-                             "benchmark's audio: docs whose audio is a "
-                             "near-dup of ANY benchmark clip are "
-                             "dropped before dedup (requires "
-                             "--audio-blobs; the audio twin of "
-                             "--image-benchmark)")
-    p_full.add_argument("--image-benchmark", default=None,
-                        help="(doc_id, blob) parquet of eval-benchmark "
-                             "IMAGES; corpus docs whose image is a "
-                             "perceptual near-dup of any benchmark image "
-                             "are dropped before dedup (the image twin "
-                             "of --benchmark). Requires --image-blobs")
-    p_full.add_argument("--video-blobs", default=None,
-                        help="(doc_id, blob) parquet for corpora with a "
-                             "video column (round 17): frame-sequence "
-                             "containers hash into temporal+content "
-                             "signatures whose near-dup pairs union "
-                             "into the dedup component graph, same "
-                             "contract as --image-blobs/--audio-blobs")
-    p_full.add_argument("--video-benchmark", default=None,
-                        help="(doc_id, blob) video parquet of an eval "
-                             "benchmark: docs whose video is a near-dup "
-                             "of ANY benchmark clip are dropped before "
-                             "dedup (requires --video-blobs)")
-    p_full.add_argument("--video-backend", default="container",
-                        choices=["container", "fake"],
-                        help="video decode backend for --video-blobs "
-                             "(container = the real frame-sequence "
-                             "decode over the stdlib BMP/PNG codecs)")
+    _add_modality_flags(p_full, "full")
 
     p_seed = sub.add_parser(
         "init-corpus", help="seed the maintained retained-corpus root"
@@ -406,33 +467,7 @@ def main(argv: list[str] | None = None) -> int:
     p_idx.add_argument("--batch-id", default="base",
                        help="write as an idempotent per-batch partition "
                             "(default 'base' keeps the root fold-safe)")
-    p_idx.add_argument("--image-blobs", default=None,
-                       help="with --perceptual: (doc_id, blob) parquet to "
-                            "hash into the perceptual index (one decode "
-                            "pass — the cost the daily loop never repays)")
-    p_idx.add_argument("--perceptual", default=None,
-                       help="perceptual-hash index path (2 BIGINTs/doc); "
-                            "requires --image-blobs")
-    p_idx.add_argument("--image-backend", default="bmp",
-                       choices=["bmp", "png", "fake", "pil"],
-                       help="see full --image-backend")
-    p_idx.add_argument("--audio-blobs", default=None,
-                       help="with --audio-index: (doc_id, blob) WAV "
-                            "parquet to hash into the audio index (one "
-                            "decode pass, like --perceptual)")
-    p_idx.add_argument("--audio-index", default=None,
-                       help="audio-hash index path (2 BIGINTs/doc); "
-                            "requires --audio-blobs")
-    p_idx.add_argument("--video-blobs", default=None,
-                       help="with --video-index: (doc_id, blob) video "
-                            "parquet to hash into the video index (one "
-                            "container-decode pass, like --perceptual)")
-    p_idx.add_argument("--video-index", default=None,
-                       help="video-hash index path (2 BIGINTs/doc); "
-                            "requires --video-blobs")
-    p_idx.add_argument("--video-backend", default="container",
-                       choices=["container", "fake"],
-                       help="see full --video-backend")
+    _add_modality_flags(p_idx, "build-index")
 
     p_inc = sub.add_parser("incremental", help="curate a daily batch")
     p_inc.add_argument("--new", required=True, help="new batch parquet")
@@ -473,54 +508,7 @@ def main(argv: list[str] | None = None) -> int:
                        help="see full --decon-n")
     p_inc.add_argument("--decon-bloom-min-grams", type=int, default=None,
                        help="see full --decon-bloom-min-grams")
-    p_inc.add_argument("--image-blobs", default=None,
-                       help="(doc_id, blob) parquet for the NEW batch's "
-                            "images; requires --perceptual-index. The "
-                            "batch is image-deduped against the retained "
-                            "corpus through the stored hash index — the "
-                            "corpus's images are never re-decoded")
-    p_inc.add_argument("--perceptual-index", default=None,
-                       help="perceptual-hash index root (from build-index "
-                            "--perceptual); with --fold-batch-id the "
-                            "surviving batch's hashes fold in after")
-    p_inc.add_argument("--image-benchmark", default=None,
-                       help="see full --image-benchmark; with "
-                            "--image-blobs alone (no --perceptual-index) "
-                            "the batch is image-DECONTAMINATED only")
-    p_inc.add_argument("--audio-blobs", default=None,
-                       help="(doc_id, blob) WAV parquet for the NEW "
-                            "batch's audio; requires --audio-index — "
-                            "the batch is audio-deduped against the "
-                            "retained corpus through the stored hash "
-                            "index, never a corpus re-decode")
-    p_inc.add_argument("--audio-index", default=None,
-                       help="audio-hash index root (from build-index "
-                            "--audio-index); with --fold-batch-id the "
-                            "surviving batch's hashes fold in after")
-    p_inc.add_argument("--audio-benchmark", default=None,
-                       help="see full --audio-benchmark; with "
-                            "--audio-blobs alone (no --audio-index) the "
-                            "batch is audio-DECONTAMINATED only")
-    p_inc.add_argument("--video-blobs", default=None,
-                       help="(doc_id, blob) video parquet for the NEW "
-                            "batch; requires --video-index — the batch "
-                            "is video-deduped against the retained "
-                            "corpus through the stored hash index, "
-                            "never a corpus re-decode")
-    p_inc.add_argument("--video-index", default=None,
-                       help="video-hash index root (from build-index "
-                            "--video-index); with --fold-batch-id the "
-                            "surviving batch's hashes fold in after")
-    p_inc.add_argument("--video-benchmark", default=None,
-                       help="see full --video-benchmark; with "
-                            "--video-blobs alone (no --video-index) the "
-                            "batch is video-DECONTAMINATED only")
-    p_inc.add_argument("--video-backend", default="container",
-                       choices=["container", "fake"],
-                       help="see full --video-backend")
-    p_inc.add_argument("--image-backend", default="bmp",
-                       choices=["bmp", "png", "fake", "pil"],
-                       help="see full --image-backend")
+    _add_modality_flags(p_inc, "incremental")
     p_inc.add_argument("--fold-batch-id", default=None,
                        help="after curating, fold the batch's SURVIVORS "
                             "into the signature index, key index, AND the "
@@ -571,42 +559,7 @@ def main(argv: list[str] | None = None) -> int:
                             "micro-batch's bins under the full run's "
                             "learned vocabulary (see incremental "
                             "--bpe-merges)")
-    p_str.add_argument("--image-blobs", default=None,
-                       help="(doc_id, blob) parquet covering the arrival "
-                            "docs' images; requires --perceptual-index. "
-                            "Each micro-batch is image-deduped against "
-                            "the retained hashes, and its survivors' "
-                            "hashes fold in — the stream form of "
-                            "incremental --image-blobs")
-    p_str.add_argument("--perceptual-index", default=None,
-                       help="perceptual-hash index root (seed with "
-                            "build-index --perceptual)")
-    p_str.add_argument("--image-benchmark", default=None,
-                       help="see full --image-benchmark")
-    p_str.add_argument("--image-backend", default="bmp",
-                       choices=["bmp", "png", "fake", "pil"],
-                       help="see full --image-backend")
-    p_str.add_argument("--audio-blobs", default=None,
-                       help="(doc_id, blob) WAV parquet covering the "
-                            "arrivals; requires --audio-index and/or "
-                            "--audio-benchmark (see incremental)")
-    p_str.add_argument("--audio-index", default=None,
-                       help="audio-hash index root; each micro-batch "
-                            "probes it and folds its survivors' hashes")
-    p_str.add_argument("--audio-benchmark", default=None,
-                       help="see full --audio-benchmark")
-    p_str.add_argument("--video-blobs", default=None,
-                       help="(doc_id, blob) video parquet covering the "
-                            "arrivals; requires --video-index and/or "
-                            "--video-benchmark (see incremental)")
-    p_str.add_argument("--video-index", default=None,
-                       help="video-hash index root; each micro-batch "
-                            "probes it and folds its survivors' hashes")
-    p_str.add_argument("--video-benchmark", default=None,
-                       help="see full --video-benchmark")
-    p_str.add_argument("--video-backend", default="container",
-                       choices=["container", "fake"],
-                       help="see full --video-backend")
+    _add_modality_flags(p_str, "stream")
     p_str.add_argument("--decon-n", type=int, default=5,
                        help="see full --decon-n")
     p_str.add_argument("--decon-bloom-min-grams", type=int, default=None,
@@ -719,7 +672,28 @@ def main(argv: list[str] | None = None) -> int:
     p_mf.add_argument("--hot-only", action="store_true",
                       help="print only folds whose quality_drift_hot "
                            "list is non-empty")
+    return ap
 
+
+def main(argv: list[str] | None = None) -> int:
+    from data_pipeline_team5_spark.pipeline import (
+        append_corpus_batch,
+        build_exact_key_index,
+        build_hash_index,
+        build_signature_index,
+        compact_fold_stores,
+        curate_incremental_batch,
+        curate_training_data,
+        next_bin_offset,
+        write_store,
+    )
+    from data_pipeline_team5_spark.operators.dedup import (
+        benchmark_gram_count,
+    )
+    from data_pipeline_team5_spark.session import get_spark
+    from pyspark.sql import functions as F
+
+    ap = _parser()
     args = ap.parse_args(argv)
 
     if args.cmd == "manifest":
@@ -783,70 +757,28 @@ def main(argv: list[str] | None = None) -> int:
             "--bpe-merges-out requires --bpe-fit "
             "(no merge table is fit without the fit stage)"
         )
-    if args.cmd == "build-index" and bool(
-        getattr(args, "image_blobs", None)
-    ) != bool(getattr(args, "perceptual", None)):
-        ap.error(
-            "build-index: --image-blobs and --perceptual go together"
-        )
-    if args.cmd == "build-index" and bool(
-        getattr(args, "audio_blobs", None)
-    ) != bool(getattr(args, "audio_index", None)):
-        ap.error(
-            "build-index: --audio-blobs and --audio-index go together"
-        )
-    if args.cmd == "build-index" and bool(
-        getattr(args, "video_blobs", None)
-    ) != bool(getattr(args, "video_index", None)):
-        ap.error(
-            "build-index: --video-blobs and --video-index go together"
-        )
-    if (
-        args.cmd in ("incremental", "stream")
-        and getattr(args, "video_blobs", None)
-        and not getattr(args, "video_index", None)
-        and not getattr(args, "video_benchmark", None)
-    ):
-        ap.error(
-            f"{args.cmd}: --video-blobs requires --video-index (the "
-            "retained corpus's video is reached only through the "
-            "stored hash index) and/or --video-benchmark (decon-only)"
-        )
-    if args.cmd == "full" and getattr(
-        args, "video_benchmark", None
-    ) and not getattr(args, "video_blobs", None):
-        ap.error("full: --video-benchmark requires --video-blobs")
-    if (
-        args.cmd in ("incremental", "stream")
-        and getattr(args, "audio_blobs", None)
-        and not getattr(args, "audio_index", None)
-        and not getattr(args, "audio_benchmark", None)
-    ):
-        ap.error(
-            f"{args.cmd}: --audio-blobs requires --audio-index (the "
-            "retained corpus's audio is reached only through the "
-            "stored hash index) and/or --audio-benchmark (decon-only)"
-        )
-    if args.cmd == "full" and getattr(
-        args, "audio_benchmark", None
-    ) and not getattr(args, "audio_blobs", None):
-        ap.error("full: --audio-benchmark requires --audio-blobs")
-    if (
-        args.cmd in ("incremental", "stream")
-        and getattr(args, "image_blobs", None)
-        and not getattr(args, "perceptual_index", None)
-        and not getattr(args, "image_benchmark", None)
-    ):
-        ap.error(
-            f"{args.cmd}: --image-blobs requires --perceptual-index "
-            "(the retained corpus's images are reached only through "
-            "the stored hash index) and/or --image-benchmark "
-            "(decon-only)"
-        )
-    if args.cmd == "full" and getattr(
-        args, "image_benchmark", None
-    ) and not getattr(args, "image_blobs", None):
-        ap.error("full: --image-benchmark requires --image-blobs")
+    for m in MODALITIES.values():
+        blobs_flag, bench_flag = f"--{m.name}-blobs", f"--{m.name}-benchmark"
+        index_flag = _index_flag(m, args.cmd)
+        has_blobs = bool(_arg(args, blobs_flag))
+        if args.cmd == "build-index" and has_blobs != bool(
+            _arg(args, index_flag)
+        ):
+            ap.error(f"build-index: {blobs_flag} and {index_flag} go together")
+        if (
+            args.cmd in ("incremental", "stream")
+            and has_blobs
+            and not _arg(args, index_flag)
+            and not _arg(args, bench_flag)
+        ):
+            verb = "are" if m.noun.endswith("s") else "is"
+            ap.error(
+                f"{args.cmd}: {blobs_flag} requires {index_flag} (the "
+                f"retained corpus's {m.noun} {verb} reached only through "
+                f"the stored hash index) and/or {bench_flag} (decon-only)"
+            )
+        if args.cmd == "full" and _arg(args, bench_flag) and not has_blobs:
+            ap.error(f"full: {bench_flag} requires {blobs_flag}")
 
     spark = get_spark(app_name=f"curate_{args.cmd}")
     bench_docs = (
@@ -888,36 +820,13 @@ def main(argv: list[str] | None = None) -> int:
         langid_models, _, langid_fill_hist = load_langid_model(
             args.langid_model
         )
-    image_blobs = (
-        spark.read.parquet(args.image_blobs)
-        if getattr(args, "image_blobs", None)
-        else None
-    )
-    image_bench = (
-        spark.read.parquet(args.image_benchmark)
-        if getattr(args, "image_benchmark", None)
-        else None
-    )
-    audio_blobs = (
-        spark.read.parquet(args.audio_blobs)
-        if getattr(args, "audio_blobs", None)
-        else None
-    )
-    audio_bench = (
-        spark.read.parquet(args.audio_benchmark)
-        if getattr(args, "audio_benchmark", None)
-        else None
-    )
-    video_blobs = (
-        spark.read.parquet(args.video_blobs)
-        if getattr(args, "video_blobs", None)
-        else None
-    )
-    video_bench = (
-        spark.read.parquet(args.video_benchmark)
-        if getattr(args, "video_benchmark", None)
-        else None
-    )
+    blobs: dict = {}
+    bench_blobs: dict = {}
+    for m in MODALITIES.values():
+        for frames, flag in ((blobs, f"--{m.name}-blobs"),
+                             (bench_blobs, f"--{m.name}-benchmark")):
+            path = _arg(args, flag)
+            frames[m.name] = spark.read.parquet(path) if path else None
     bpe_merges = None
     if getattr(args, "bpe_merges", None):
         # frozen merge table (round 17): the daily loop sizes bins
@@ -927,6 +836,133 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         bpe_merges, _ = load_bpe_merges(args.bpe_merges)
+
+    def _curate(new, fold: str | None):
+        """One batch through ``curate_incremental_batch`` against the
+        stored indexes, shared by `incremental` and every `stream`
+        micro-batch: (the langid-filled batch, its batch-local
+        assignments, the langid mixture probe when folding)."""
+        langid_probe = None
+        if langid_models is not None:
+            # frozen langid fill: NULL langs filled under the FULL run's
+            # models before the allowlist — never a refit on one day's
+            # labeled slice
+            from data_pipeline_team5_spark.operators.langid import (
+                fill_missing_lang,
+            )
+
+            filled = fill_missing_lang(new, langid_models)
+            if fold is not None:
+                # the fold's lang mixture vs the model's fit-time
+                # snapshot, for the manifest
+                langid_probe = _langid_mixture_probe(
+                    filled, langid_fill_hist
+                )
+            new = filled.drop("lang_source")
+        corpus = spark.read.parquet(args.corpus)
+        if fold is not None and "batch_id" in corpus.columns:
+            # replay safety: a crashed day D re-run must not see its own
+            # previously folded survivors in the corpus or the indexes
+            corpus = corpus.filter(F.col("batch_id") != fold)
+        out = curate_incremental_batch(
+            new,
+            corpus,
+            token_budget=args.budget,
+            neardup_threshold=args.threshold,
+            index_sig_path=args.sig,
+            key_index_path=args.key,
+            exclude_batch_id=fold,
+            benchmark_docs=bench_docs,
+            decon_bloom_min_grams=args.decon_bloom_min_grams,
+            bench_gram_count=bench_n_grams,
+            decon_n=args.decon_n,
+            quality_model=frozen_quality,
+            bpe_merges=bpe_merges,
+            **_modality_kwargs(args, blobs, bench_blobs, batch=True),
+        )
+        return new, out, langid_probe
+
+    def _fold(fold: str, new, out, langid_probe) -> dict:
+        """The fold body of `incremental --fold-batch-id` and of every
+        `stream` micro-batch. Offsets the batch-local bins past every
+        OTHER batch's max (excluding this batch keeps a replay bitwise-
+        idempotent with the partition overwrite), writes the assignments
+        partition, reads back the kept rows, grows every index and the
+        corpus together (see the module docstring), delivers shards when
+        asked, and writes the fold's manifest row, which it returns."""
+        off = next_bin_offset(spark, args.out, exclude_batch_id=fold)
+        placed = out.withColumn("bin_id", F.col("bin_id") + F.lit(off))
+        write_store(placed, args.out, fold)
+        kept = _read_fold_kept(spark, args.out, fold, placed.schema)
+        manifest = {"fold": fold, "kept": kept.count()}
+        ids = kept.select("doc_id")
+        survivors = new.join(ids, "doc_id")
+        build_signature_index(survivors, args.sig, batch_id=fold)
+        build_exact_key_index(survivors, args.key, batch_id=fold)
+        for m in MODALITIES.values():
+            # tomorrow's batch probes today's survivors' hashes, never
+            # their payloads
+            path = _arg(args, _index_flag(m, args.cmd))
+            if blobs[m.name] is not None and path:
+                build_hash_index(
+                    m.name, blobs[m.name].join(ids, "doc_id"), path,
+                    backend=_arg(args, f"--{m.name}-backend"),
+                    batch_id=fold,
+                )
+        append_corpus_batch(survivors, args.corpus, fold)
+        if _arg(args, "--shard-root"):
+            from data_pipeline_team5_spark.sources.writers import (
+                write_training_shards,
+            )
+
+            write_training_shards(survivors, args.shard_root, batch_id=fold)
+        who = (
+            "this batch" if args.cmd == "incremental"
+            else f"micro-batch {fold}"
+        )
+        drift = _quality_drift_probe(
+            new, frozen_quality, bench_docs, args.decon_bloom_min_grams,
+            bench_n_grams, args.decon_n, who,
+        )
+        if drift is not None:
+            manifest["quality_drift_tv"] = drift[0]
+            manifest["quality_drift_hot"] = sorted(drift[1])
+        if _arg(args, "--report-drift"):
+            from data_pipeline_team5_spark.plans.versioning_family import (
+                drift_report,
+            )
+
+            grown = spark.read.parquet(args.corpus)
+            pre = grown.filter(F.col("batch_id") != fold)
+            manifest["corpus_drift_tv"] = {
+                r["feature"]: r["tv"]
+                for r in drift_report(
+                    pre.select("lang", "n_chars"),
+                    grown.select("lang", "n_chars"),
+                ).collect()
+            }
+        if langid_probe is not None:
+            from data_pipeline_team5_spark.operators.langid import (
+                LANGID_DRIFT_WARN_TV,
+            )
+
+            mixture, li_tv, li_hot = langid_probe
+            manifest["langid_mixture"] = mixture
+            manifest["langid_drift_tv"] = li_tv
+            manifest["langid_drift_hot"] = li_hot
+            if li_hot:
+                print(
+                    f"WARNING: frozen langid model looks stale for {who}"
+                    f" — predicted-lang mixture TV {li_tv:.3f} exceeds "
+                    f"{LANGID_DRIFT_WARN_TV} vs the full run's fill "
+                    "snapshot (refit via `full --langid-fill "
+                    "--langid-model-out`, or confirm the batch really is "
+                    "from a shifted source)",
+                    file=sys.stderr,
+                )
+        _write_fold_manifest(args.out, fold, manifest)
+        return manifest
+
     if args.cmd == "full":
         full_docs = spark.read.parquet(args.docs)
         if args.bpe_fit:
@@ -969,14 +1005,7 @@ def main(argv: list[str] | None = None) -> int:
             quality_model_out=args.quality_model_out,
             langid_fill=args.langid_fill,
             langid_model_out=args.langid_model_out,
-            image_blobs=image_blobs,
-            benchmark_image_blobs=image_bench,
-            image_backend=args.image_backend,
-            audio_blobs=audio_blobs,
-            benchmark_audio_blobs=audio_bench,
-            video_blobs=video_blobs,
-            benchmark_video_blobs=video_bench,
-            video_backend=args.video_backend,
+            **_modality_kwargs(args, blobs, bench_blobs, batch=False),
             bpe_merges=bpe_merges,
             scrub_pii=args.scrub_pii,
             survivor_policy=args.survivor_policy,
@@ -1003,32 +1032,19 @@ def main(argv: list[str] | None = None) -> int:
         docs = spark.read.parquet(args.docs)
         build_signature_index(docs, args.sig, batch_id=args.batch_id)
         build_exact_key_index(docs, args.key, batch_id=args.batch_id)
-        if image_blobs is not None:
-            build_perceptual_index(
-                image_blobs, args.perceptual,
-                backend=args.image_backend, batch_id=args.batch_id,
-            )
-        if audio_blobs is not None:
-            from data_pipeline_team5_spark.pipeline import (
-                build_audio_index,
-            )
-
-            build_audio_index(
-                audio_blobs, args.audio_index, batch_id=args.batch_id,
-            )
-        if video_blobs is not None:
-            from data_pipeline_team5_spark.pipeline import (
-                build_video_index,
-            )
-
-            build_video_index(
-                video_blobs, args.video_index,
-                backend=args.video_backend, batch_id=args.batch_id,
-            )
-        print(json.dumps({"status": "ok", "cmd": "build-index",
-                          "sig": args.sig, "key": args.key,
-                          "perceptual": getattr(args, "perceptual", None),
-                          "batch_id": args.batch_id}))
+        summary = {"status": "ok", "cmd": "build-index",
+                   "sig": args.sig, "key": args.key}
+        for m in MODALITIES.values():
+            index_flag = _index_flag(m, args.cmd)
+            if blobs[m.name] is not None:
+                build_hash_index(
+                    m.name, blobs[m.name], _arg(args, index_flag),
+                    backend=_arg(args, f"--{m.name}-backend"),
+                    batch_id=args.batch_id,
+                )
+            summary[index_flag[2:].replace("-", "_")] = _arg(args, index_flag)
+        summary["batch_id"] = args.batch_id
+        print(json.dumps(summary))
     elif args.cmd == "compact":
         report = compact_fold_stores(spark, args.roots, into=args.into)
         print(json.dumps({"status": "ok", "cmd": "compact",
@@ -1300,183 +1316,19 @@ def main(argv: list[str] | None = None) -> int:
             },
         }))
     elif args.cmd == "stream":
-        # The per-micro-batch body is exactly the `incremental
-        # --fold-batch-id` daily loop with fold = "s{batch_id}"; Structured
-        # Streaming's durable checkpoint replaces the cron — a rerun picks
-        # up only unseen arrival files, and a batch that crashed mid-fold
-        # replays under ITS OWN batch id, converging through the same
-        # idempotent partition overwrites the daily loop relies on.
-        stream_roots = [(args.corpus, "corpus"), (args.sig, "sig"),
-                        (args.key, "key"), (args.out, "out")]
-        if getattr(args, "perceptual_index", None):
-            stream_roots.append(
-                (args.perceptual_index, "perceptual-index")
-            )
-        if getattr(args, "audio_index", None):
-            stream_roots.append((args.audio_index, "audio-index"))
-        if getattr(args, "video_index", None):
-            stream_roots.append((args.video_index, "video-index"))
-        for path, what in stream_roots:
-            _refuse_flat_root(path, what)
+        # Each micro-batch runs the `incremental --fold-batch-id` body
+        # with fold = "s{batch_id}"; Structured Streaming's durable
+        # checkpoint replaces the cron — a rerun picks up only unseen
+        # arrival files, and a batch that crashed mid-fold replays under
+        # ITS OWN batch id, converging through the same idempotent
+        # partition overwrites the daily loop relies on.
+        _refuse_fold_roots(args)
         schema = spark.read.parquet(args.arrivals).schema
         processed: list[str] = []
 
         def process(batch_df, batch_id: int) -> None:
             fold = f"s{batch_id}"
-            langid_probe = None
-            if langid_models is not None:
-                from data_pipeline_team5_spark.operators.langid import (
-                    fill_missing_lang,
-                )
-
-                filled = fill_missing_lang(batch_df, langid_models)
-                # round 17 (VERDICT r16 #2): the fold's lang mixture vs
-                # the frozen model's fit-time snapshot — batch-sized
-                langid_probe = _langid_mixture_probe(
-                    filled, langid_fill_hist
-                )
-                batch_df = filled.drop("lang_source")
-            corpus = spark.read.parquet(args.corpus)
-            if "batch_id" in corpus.columns:
-                corpus = corpus.filter(F.col("batch_id") != fold)
-            out = curate_incremental_batch(
-                batch_df,
-                corpus,
-                token_budget=args.budget,
-                neardup_threshold=args.threshold,
-                index_sig_path=args.sig,
-                key_index_path=args.key,
-                exclude_batch_id=fold,
-                benchmark_docs=bench_docs,
-                decon_bloom_min_grams=args.decon_bloom_min_grams,
-                bench_gram_count=bench_n_grams,
-                decon_n=args.decon_n,
-                quality_model=frozen_quality,
-                new_image_blobs=image_blobs,
-                perceptual_index_path=getattr(
-                    args, "perceptual_index", None
-                ),
-                benchmark_image_blobs=image_bench,
-                image_backend=args.image_backend,
-                new_audio_blobs=audio_blobs,
-                audio_index_path=getattr(args, "audio_index", None),
-                benchmark_audio_blobs=audio_bench,
-                new_video_blobs=video_blobs,
-                video_index_path=getattr(args, "video_index", None),
-                benchmark_video_blobs=video_bench,
-                video_backend=args.video_backend,
-                bpe_merges=bpe_merges,
-            )
-            off = next_bin_offset(spark, args.out, exclude_batch_id=fold)
-            written = (
-                out.withColumn("bin_id", F.col("bin_id") + F.lit(off))
-                .withColumn("batch_id", F.lit(fold))
-            )
-            (
-                written.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(args.out)
-            )
-            kept = _read_fold_kept(
-                spark, args.out, fold, written.schema
-            )
-            survivors = batch_df.join(kept.select("doc_id"), "doc_id")
-            build_signature_index(survivors, args.sig, batch_id=fold)
-            build_exact_key_index(survivors, args.key, batch_id=fold)
-            if image_blobs is not None and getattr(
-                args, "perceptual_index", None
-            ):
-                build_perceptual_index(
-                    image_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.perceptual_index,
-                    backend=args.image_backend,
-                    batch_id=fold,
-                )
-            if audio_blobs is not None and getattr(
-                args, "audio_index", None
-            ):
-                from data_pipeline_team5_spark.pipeline import (
-                    build_audio_index,
-                )
-
-                build_audio_index(
-                    audio_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.audio_index,
-                    batch_id=fold,
-                )
-            if video_blobs is not None and getattr(
-                args, "video_index", None
-            ):
-                from data_pipeline_team5_spark.pipeline import (
-                    build_video_index,
-                )
-
-                build_video_index(
-                    video_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.video_index,
-                    backend=args.video_backend,
-                    batch_id=fold,
-                )
-            append_corpus_batch(survivors, args.corpus, fold)
-            if args.shard_root:
-                from data_pipeline_team5_spark.sources.writers import (
-                    write_training_shards,
-                )
-
-                write_training_shards(
-                    survivors, args.shard_root, batch_id=fold
-                )
-            # round 16 (VERDICT r15 #7): the stream loop applies the
-            # frozen model but a console warning dies with the worker —
-            # per-micro-batch drift goes into the SAME durable fold
-            # manifest as the daily loop's, so a drifting week is
-            # visible in the artifact trail.
-            manifest = {"fold": fold, "kept": kept.count()}
-            if langid_probe is not None:
-                import sys as _sys
-
-                from data_pipeline_team5_spark.operators.langid import (
-                    LANGID_DRIFT_WARN_TV,
-                )
-
-                mixture, li_tv, li_hot = langid_probe
-                manifest["langid_mixture"] = mixture
-                manifest["langid_drift_tv"] = li_tv
-                manifest["langid_drift_hot"] = li_hot
-                if li_hot:
-                    print(
-                        "WARNING: frozen langid model looks stale for "
-                        f"micro-batch {fold} — predicted-lang mixture "
-                        f"TV {li_tv:.3f} exceeds {LANGID_DRIFT_WARN_TV}"
-                        " vs the full run's fill snapshot",
-                        file=_sys.stderr,
-                    )
-            if frozen_quality is not None and frozen_quality.get(
-                "score_hist"
-            ):
-                import sys as _sys
-
-                from data_pipeline_team5_spark.operators.quality import (
-                    QUALITY_DRIFT_WARN_TV,
-                )
-
-                drift, hot = _quality_drift_probe(
-                    batch_df, frozen_quality, bench_docs,
-                    args.decon_bloom_min_grams, bench_n_grams,
-                    args.decon_n,
-                )
-                manifest["quality_drift_tv"] = drift
-                manifest["quality_drift_hot"] = sorted(hot)
-                if hot:
-                    print(
-                        "WARNING: frozen quality model looks stale for "
-                        f"micro-batch {fold} — score-distribution TV "
-                        f"{hot} exceeds {QUALITY_DRIFT_WARN_TV} vs the "
-                        "full run's snapshot",
-                        file=_sys.stderr,
-                    )
-            _write_fold_manifest(args.out, fold, manifest)
+            _fold(fold, *_curate(batch_df, fold))
             processed.append(fold)
 
         ckpt = args.checkpoint or (args.out.rstrip("/") + "_ckpt")
@@ -1501,217 +1353,32 @@ def main(argv: list[str] | None = None) -> int:
     else:
         fold = args.fold_batch_id
         if fold is not None:
-            roots = [(args.corpus, "corpus"), (args.sig, "sig"),
-                     (args.key, "key"), (args.out, "out")]
-            if getattr(args, "perceptual_index", None):
-                roots.append((args.perceptual_index, "perceptual-index"))
-            if getattr(args, "audio_index", None):
-                roots.append((args.audio_index, "audio-index"))
-            if getattr(args, "video_index", None):
-                roots.append((args.video_index, "video-index"))
-            for path, what in roots:
-                _refuse_flat_root(path, what)
-        new = spark.read.parquet(args.new)
-        langid_probe = None
-        if langid_models is not None:
-            # frozen langid fill (round 16): NULL langs filled under the
-            # FULL run's models before the allowlist — never a refit on
-            # one day's labeled slice
-            from data_pipeline_team5_spark.operators.langid import (
-                fill_missing_lang,
-            )
-
-            filled = fill_missing_lang(new, langid_models)
-            if fold is not None:
-                # round 17 (VERDICT r16 #2): the fold's lang mixture vs
-                # the frozen model's fit-time snapshot, for the manifest
-                langid_probe = _langid_mixture_probe(
-                    filled, langid_fill_hist
-                )
-            new = filled.drop("lang_source")
-        corpus = spark.read.parquet(args.corpus)
-        if fold is not None and "batch_id" in corpus.columns:
-            # replay safety: a crashed day D re-run must not see its own
-            # previously folded survivors in the corpus or the indexes
-            corpus = corpus.filter(F.col("batch_id") != fold)
-        out = curate_incremental_batch(
-            new,
-            corpus,
-            token_budget=args.budget,
-            neardup_threshold=args.threshold,
-            index_sig_path=args.sig,
-            key_index_path=args.key,
-            exclude_batch_id=fold,
-            benchmark_docs=bench_docs,
-            decon_bloom_min_grams=args.decon_bloom_min_grams,
-            bench_gram_count=bench_n_grams,
-            decon_n=args.decon_n,
-            quality_model=frozen_quality,
-            new_image_blobs=image_blobs,
-            perceptual_index_path=getattr(args, "perceptual_index", None),
-            benchmark_image_blobs=image_bench,
-            image_backend=args.image_backend,
-            new_audio_blobs=audio_blobs,
-            audio_index_path=getattr(args, "audio_index", None),
-            benchmark_audio_blobs=audio_bench,
-            new_video_blobs=video_blobs,
-            video_index_path=getattr(args, "video_index", None),
-            benchmark_video_blobs=video_bench,
-            video_backend=getattr(args, "video_backend", "container"),
-            bpe_merges=bpe_merges,
-        )
+            _refuse_fold_roots(args)
+        new, out, langid_probe = _curate(spark.read.parquet(args.new), fold)
         if fold is None:
             out.write.mode("overwrite").parquet(args.out)
-            kept = spark.read.parquet(args.out)
-            n = kept.count()
-        else:
-            # batch-local bins → globally-unique bins: offset past every
-            # OTHER batch's max (excluding this batch id keeps a replay
-            # bitwise-idempotent with the partition overwrite)
-            off = next_bin_offset(spark, args.out, exclude_batch_id=fold)
-            written = (
-                out.withColumn("bin_id", F.col("bin_id") + F.lit(off))
-                .withColumn("batch_id", F.lit(fold))
+            manifest = {"kept": spark.read.parquet(args.out).count()}
+            drift = _quality_drift_probe(
+                new, frozen_quality, bench_docs, args.decon_bloom_min_grams,
+                bench_n_grams, args.decon_n, "this batch",
             )
-            (
-                written.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(args.out)
-            )
-            kept = _read_fold_kept(
-                spark, args.out, fold, written.schema
-            )
-            n = kept.count()
-            survivors = new.join(kept.select("doc_id"), "doc_id")
-            build_signature_index(survivors, args.sig, batch_id=fold)
-            build_exact_key_index(survivors, args.key, batch_id=fold)
-            if image_blobs is not None and getattr(
-                args, "perceptual_index", None
-            ):
-                # image twin of the signature fold: tomorrow's batch
-                # probes today's survivors' hashes, never their pixels
-                build_perceptual_index(
-                    image_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.perceptual_index,
-                    backend=args.image_backend,
-                    batch_id=fold,
-                )
-            if audio_blobs is not None and getattr(
-                args, "audio_index", None
-            ):
-                # audio twin (round 16): the survivors' audio hashes
-                # fold in — tomorrow probes hashes, never samples
-                from data_pipeline_team5_spark.pipeline import (
-                    build_audio_index,
-                )
-
-                build_audio_index(
-                    audio_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.audio_index,
-                    batch_id=fold,
-                )
-            if video_blobs is not None and getattr(
-                args, "video_index", None
-            ):
-                # video twin (round 17): the survivors' video hashes
-                # fold in — tomorrow probes hashes, never frames
-                from data_pipeline_team5_spark.pipeline import (
-                    build_video_index,
-                )
-
-                build_video_index(
-                    video_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.video_index,
-                    backend=getattr(args, "video_backend", "container"),
-                    batch_id=fold,
-                )
-            # the corpus grows too — see module docstring (ADVICE r6 #1)
-            append_corpus_batch(survivors, args.corpus, fold)
-        summary = {"status": "ok", "cmd": "incremental", "kept": n,
-                   "out": args.out, "folded": fold}
-        if frozen_quality is not None and frozen_quality.get("score_hist"):
-            # frozen-model drift guard (round 15, VERDICT r14 #4): TV
-            # distance of the batch's score distribution vs the full
-            # run's stored snapshot — a stale/mismatched model is
-            # FLAGGED, never silently applied. Batch-sized work, via
-            # the probe the stream loop shares.
-            import sys as _sys
-
-            from data_pipeline_team5_spark.operators.quality import (
-                QUALITY_DRIFT_WARN_TV,
-            )
-
-            drift, hot = _quality_drift_probe(
-                new, frozen_quality, bench_docs,
-                args.decon_bloom_min_grams, bench_n_grams, args.decon_n,
-            )
-            summary["quality_drift_tv"] = drift
-            if hot:
-                print(
-                    "WARNING: frozen quality model looks stale for this "
-                    f"batch — score-distribution TV {hot} exceeds "
-                    f"{QUALITY_DRIFT_WARN_TV} vs the full run's snapshot"
-                    " (refit via `full --quality-model-out`, or confirm "
-                    "the batch really is from a shifted source)",
-                    file=_sys.stderr,
-                )
-        if getattr(args, "report_drift", False):
-            if fold is None:
+            if drift is not None:
+                manifest["quality_drift_tv"] = drift[0]
+            if args.report_drift:
                 raise ValueError(
                     "--report-drift requires --fold-batch-id (drift is "
                     "defined against the maintained corpus root)"
                 )
-            from data_pipeline_team5_spark.plans.versioning_family import (
-                drift_report,
-            )
-
-            grown = spark.read.parquet(args.corpus)
-            pre = grown.filter(F.col("batch_id") != fold)
-            summary["drift_tv"] = {
-                r["feature"]: r["tv"]
-                for r in drift_report(
-                    pre.select("lang", "n_chars"),
-                    grown.select("lang", "n_chars"),
-                ).collect()
-            }
-        if fold is not None:
-            # round 16 (VERDICT r15 #7): persist the fold's drift
-            # evidence next to its assignments — manifest, not console
-            manifest = {"fold": fold, "kept": summary["kept"]}
-            if "quality_drift_tv" in summary:
-                manifest["quality_drift_tv"] = summary[
-                    "quality_drift_tv"
-                ]
-                manifest["quality_drift_hot"] = sorted(hot)
-            if "drift_tv" in summary:
-                manifest["corpus_drift_tv"] = summary["drift_tv"]
-            if langid_probe is not None:
-                # round 17 (VERDICT r16 #2): the langid mixture row —
-                # manifest symmetry with the quality drift guard
-                import sys as _sys
-
-                from data_pipeline_team5_spark.operators.langid import (
-                    LANGID_DRIFT_WARN_TV,
-                )
-
-                mixture, li_tv, li_hot = langid_probe
-                manifest["langid_mixture"] = mixture
-                manifest["langid_drift_tv"] = li_tv
-                manifest["langid_drift_hot"] = li_hot
-                summary["langid_drift_tv"] = li_tv
-                if li_hot:
-                    print(
-                        "WARNING: frozen langid model looks stale for "
-                        f"this batch — predicted-lang mixture TV "
-                        f"{li_tv:.3f} exceeds {LANGID_DRIFT_WARN_TV} "
-                        "vs the full run's fill snapshot (refit via "
-                        "`full --langid-fill --langid-model-out`, or "
-                        "confirm the batch really is from a shifted "
-                        "source)",
-                        file=_sys.stderr,
-                    )
-            _write_fold_manifest(args.out, fold, manifest)
+        else:
+            manifest = _fold(fold, new, out, langid_probe)
+        summary = {"status": "ok", "cmd": "incremental",
+                   "kept": manifest["kept"], "out": args.out,
+                   "folded": fold}
+        for key, name in (("quality_drift_tv", "quality_drift_tv"),
+                          ("corpus_drift_tv", "drift_tv"),
+                          ("langid_drift_tv", "langid_drift_tv")):
+            if key in manifest:
+                summary[name] = manifest[key]
         print(json.dumps(summary))
     return 0
 

@@ -29,7 +29,8 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -1398,3 +1399,35 @@ def attach_wav_blob(
     return df.select("doc_id", text_col).mapInPandas(
         batches, "doc_id BIGINT, blob BINARY"
     )
+
+
+# ---------------------------------------------------------------------------
+# The modality table. Every per-modality step of the curation presets
+# (pipeline.py) and of the curate CLI is one loop over it: the three
+# hashers emit the same (doc_id, dhash, ahash) table, so decontamination,
+# pair generation, the index probe and the index build never look at
+# which modality they serve. Order matters only for plan order (image,
+# then audio, then video).
+
+
+class Modality(NamedTuple):
+    name: str  # prefixes the preset kwargs and CLI flags: image_blobs
+    hashes: Callable[..., DataFrame]  # (doc_id, blob) → (doc_id, dhash, ahash)
+    backend: str  # default decode backend
+    backends: tuple[str, ...]  # CLI backend choices; () = no backend flag
+    index: str  # stored index stem: perceptual_index_path, build_perceptual_index
+    noun: str  # what error messages call the payloads
+    max_hamming: int = 6
+    max_bucket: int | None = PERCEPTUAL_MAX_BUCKET
+
+
+MODALITIES: dict[str, Modality] = {
+    m.name: m
+    for m in (
+        Modality("image", perceptual_hashes, "bmp",
+                 ("bmp", "png", "fake", "pil"), "perceptual", "images"),
+        Modality("audio", audio_hashes, "wav", (), "audio", "audio"),
+        Modality("video", video_hashes, "container",
+                 ("container", "fake"), "video", "video"),
+    )
+}

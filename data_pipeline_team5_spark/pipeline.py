@@ -14,6 +14,7 @@ transform_daily   ≡ dbt box_office_showrange.sql via dbt_dags.py:64-78
 
 from __future__ import annotations
 
+import functools
 import logging
 import time
 from collections.abc import Callable
@@ -24,7 +25,8 @@ from pyspark.sql import functions as F
 
 from data_pipeline_team5_spark.functions.scalars import dsum
 from data_pipeline_team5_spark.operators.multimodal import (
-    PERCEPTUAL_MAX_BUCKET,
+    MODALITIES,
+    Modality,
 )
 from data_pipeline_team5_spark.operators.pivoting import pivot_max_cells
 from data_pipeline_team5_spark.sources.ingest import ingest_box_office_json
@@ -382,6 +384,76 @@ def _curation_filter_stage(
     return kept
 
 
+def _modality_decon(
+    kept: DataFrame,
+    blobs: dict[str, DataFrame | None],
+    bench_blobs: dict[str, DataFrame | None],
+    backends: dict[str, str],
+    batch: bool,
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Payload decontamination for both presets, one pass per modality
+    with benchmark blobs: the kept pool's payloads decode ONCE into a
+    pinned 2-longs/doc hash table, and docs within the modality's
+    ``max_hamming`` of any benchmark payload drop — the payload twin of
+    the 5-gram rule, at the same early stage (eval overlap must never
+    reach training bins). Returns the filtered pool and the pinned
+    tables, which the dedup stage reuses (:func:`_pool_hashes`) so
+    turning decon on never adds a second decode pass. ``batch`` picks
+    the incremental preset's names for the error message."""
+    from data_pipeline_team5_spark.operators.multimodal import (
+        contaminated_image_ids,
+    )
+
+    caller, side, whose = (
+        ("curate_incremental_batch", "new_", "the batch's")
+        if batch
+        else ("curate_training_data", "", "the corpus side's")
+    )
+    decoded: dict[str, DataFrame] = {}
+    for m in MODALITIES.values():
+        if bench_blobs[m.name] is None:
+            continue
+        if blobs[m.name] is None:
+            raise ValueError(
+                f"{caller}: benchmark_{m.name}_blobs requires "
+                f"{side}{m.name}_blobs ({whose} {m.noun})"
+            )
+        backend = backends.get(m.name, m.backend)
+        pool = m.hashes(
+            blobs[m.name].join(kept.select("doc_id"), "doc_id"),
+            backend=backend,
+        ).localCheckpoint()
+        bench = m.hashes(
+            bench_blobs[m.name], backend=backend
+        ).localCheckpoint()
+        bad = contaminated_image_ids(
+            pool, bench, max_hamming=m.max_hamming
+        ).select("doc_id")
+        kept = kept.join(bad, "doc_id", "left_anti")
+        decoded[m.name] = pool
+    return kept, decoded
+
+
+def _pool_hashes(
+    m: Modality,
+    blobs: dict[str, DataFrame | None],
+    decoded: dict[str, DataFrame],
+    pool: DataFrame,
+    backends: dict[str, str],
+) -> DataFrame:
+    """The (doc_id, dhash, ahash) table of ``pool``'s payloads for the
+    dedup stage: the decon stage's pinned table subset by id when there
+    is one, else one decode restricted to the pool, pinned so the banded
+    join's two branches never re-run the decode."""
+    ids = pool.select("doc_id")
+    if m.name in decoded:
+        return decoded[m.name].join(ids, "doc_id")
+    return m.hashes(
+        blobs[m.name].join(ids, "doc_id"),
+        backend=backends.get(m.name, m.backend),
+    ).localCheckpoint()
+
+
 def curate_training_data(
     docs: DataFrame,
     token_budget: int = 2048,
@@ -406,20 +478,13 @@ def curate_training_data(
     image_blobs: DataFrame | None = None,
     benchmark_image_blobs: DataFrame | None = None,
     image_backend: str = "bmp",
-    image_max_hamming: int = 6,
-    image_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     langid_fill: bool = False,
     langid_model_out: str | None = None,
     audio_blobs: DataFrame | None = None,
     benchmark_audio_blobs: DataFrame | None = None,
-    audio_backend: str = "wav",
-    audio_max_hamming: int = 6,
-    audio_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     video_blobs: DataFrame | None = None,
     benchmark_video_blobs: DataFrame | None = None,
     video_backend: str = "container",
-    video_max_hamming: int = 6,
-    video_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     bpe_merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The end-to-end training-data curation a 100 TB corpus run ships,
@@ -490,15 +555,19 @@ def curate_training_data(
     driver-local temp dir is used (local mode only). Intermediate edge
     lists are deleted after the labels write either way.
 
-    ``image_blobs`` (round 15, VERDICT r14 #1): optional (doc_id, blob)
-    frame for corpora with an image column. Perceptual near-dup pairs
-    (aHash/dHash, operators/multimodal.py) union into the text pair
-    graph before the component step, so image-duplicate docs collapse
-    under the same survivor policy as text near-dups. ``image_backend``
-    picks the decode ("bmp" stdlib / "fake" / gated "pil");
-    ``image_max_bucket`` defaults to the production degenerate-bucket
-    cap (the round-14 measured quadratic-pair-list trade — correct
-    here, where clusters, not pair lists, are consumed).
+    **Modalities.** Each row of ``operators/multimodal.py:MODALITIES``
+    (image, audio, video) adds three optional kwargs:
+    ``<m>_blobs``, a (doc_id, blob) frame of the corpus's payloads;
+    ``benchmark_<m>_blobs``, the eval benchmark's payloads; and, where
+    the table lists decode choices, ``<m>_backend``. With a benchmark,
+    docs whose payload is within the table's ``max_hamming`` of any
+    benchmark payload drop right after stage 1 (decontamination). With
+    blobs, the payloads' perceptual near-dup pairs (the capped banded
+    dHash join; the cap is correct here, where clusters, not pair
+    lists, are consumed) union into the text pair graph before stage 3,
+    so payload duplicates collapse under the same survivor policy. Each
+    modality decodes once: the decon stage's pinned 2-longs/doc hash
+    table is reused by the dedup stage.
     """
     from data_pipeline_team5_spark.operators.components import (
         connected_components,
@@ -564,95 +633,18 @@ def curate_training_data(
         decon_n=decon_n,
     )
 
-    # 1a-image. optional IMAGE-grain decontamination (round 15): drop
-    # docs whose image is a perceptual near-dup of ANY eval-benchmark
-    # image — the image twin of the 5-gram rule above, at the same
-    # early stage (eval overlap must never reach training bins). The
-    # kept pool's images decode ONCE here into a pinned 2-longs/doc
-    # hash table that the dedup stage (3b) reuses by id semi-join, so
-    # turning decon on never adds a second decode pass.
-    ih_kept: DataFrame | None = None
-    if benchmark_image_blobs is not None:
-        if image_blobs is None:
-            raise ValueError(
-                "curate_training_data: benchmark_image_blobs requires "
-                "image_blobs (the corpus side's images)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            perceptual_hashes,
-        )
-
-        ih_kept = perceptual_hashes(
-            image_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=image_backend,
-        ).localCheckpoint()
-        bh = perceptual_hashes(
-            benchmark_image_blobs, backend=image_backend
-        ).localCheckpoint()
-        bad = contaminated_image_ids(
-            ih_kept, bh, max_hamming=image_max_hamming
-        ).select("doc_id")
-        kept = kept.join(bad, "doc_id", "left_anti")
-
-    # 1a-audio (round 16): audio-grain decontamination — the audio twin
-    # of the image rule above, at the same early stage (eval audio must
-    # never reach training bins). The hash-table machinery is modality-
-    # blind, so contaminated_image_ids runs on audio hashes verbatim;
-    # the kept pool's one decode pass is pinned and reused by the
-    # audio-dedup stage (3c) below.
-    ah_kept: DataFrame | None = None
-    if benchmark_audio_blobs is not None:
-        if audio_blobs is None:
-            raise ValueError(
-                "curate_training_data: benchmark_audio_blobs requires "
-                "audio_blobs (the corpus side's audio)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            contaminated_image_ids,
-        )
-
-        ah_kept = audio_hashes(
-            audio_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=audio_backend,
-        ).localCheckpoint()
-        abh = audio_hashes(
-            benchmark_audio_blobs, backend=audio_backend
-        ).localCheckpoint()
-        abad = contaminated_image_ids(
-            ah_kept, abh, max_hamming=audio_max_hamming
-        ).select("doc_id")
-        kept = kept.join(abad, "doc_id", "left_anti")
-
-    # 1a-video (round 17, VERDICT r16 #1): video-grain decontamination
-    # — same contract, third modality: the hash-table machinery is
-    # modality-blind, so contaminated_image_ids runs on video hashes
-    # verbatim; the kept pool's one container decode pass is pinned and
-    # reused by the video-dedup stage (3d) below.
-    vh_kept: DataFrame | None = None
-    if benchmark_video_blobs is not None:
-        if video_blobs is None:
-            raise ValueError(
-                "curate_training_data: benchmark_video_blobs requires "
-                "video_blobs (the corpus side's video)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            video_hashes,
-        )
-
-        vh_kept = video_hashes(
-            video_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=video_backend,
-        ).localCheckpoint()
-        vbh = video_hashes(
-            benchmark_video_blobs, backend=video_backend
-        ).localCheckpoint()
-        vbad = contaminated_image_ids(
-            vh_kept, vbh, max_hamming=video_max_hamming
-        ).select("doc_id")
-        kept = kept.join(vbad, "doc_id", "left_anti")
+    # 1a. optional payload decontamination, one pass per modality
+    blobs = {"image": image_blobs, "audio": audio_blobs,
+             "video": video_blobs}
+    backends = {"image": image_backend, "video": video_backend}
+    kept, decoded = _modality_decon(
+        kept,
+        blobs,
+        {"image": benchmark_image_blobs, "audio": benchmark_audio_blobs,
+         "video": benchmark_video_blobs},
+        backends,
+        batch=False,
+    )
 
     # 1b. optional MODEL-BASED quality filters (round 14, operators/
     # quality.py — the CCNet two-signal stack), applied to the filtered
@@ -839,97 +831,22 @@ def curate_training_data(
         method=neardup_method,
         n_docs=n_docs,
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # 3b. optional IMAGE near-dup pairs (round 15, VERDICT r14 #1): docs
-    # whose image payloads are perceptual near-dups (dHash Hamming ≤
-    # image_max_hamming via the capped banded join) union into the SAME
-    # component graph, so one doc carrying a re-encoded copy of
-    # another's image collapses into its component and the chosen
-    # survivor_policy — min_id/quality/source_rank — applies to the
-    # image modality unchanged. Hashing is restricted to the curated+
-    # exact-deduped pool (docs already dropped never decode), and the
-    # hash table is pinned (2 longs/doc) so the banded self-join's two
-    # branches never re-run the Arrow decode.
-    if image_blobs is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_hashes,
-            perceptual_pairs,
-        )
+    # 3b. optional payload near-dup pairs join the same component graph
+    from data_pipeline_team5_spark.operators.multimodal import (
+        perceptual_pairs,
+    )
 
-        if ih_kept is not None:
-            # reuse the decon stage's decode pass: subset the pinned
-            # 2-longs/doc table to the curated+deduped pool by id
-            ih = ih_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            ih = perceptual_hashes(
-                image_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=image_backend,
-            ).localCheckpoint()
-        ipairs = perceptual_pairs(
-            ih,
-            max_hamming=image_max_hamming,
-            max_bucket=image_max_bucket,
-        ).select(
+    for m in MODALITIES.values():
+        if blobs[m.name] is None:
+            continue
+        mpairs = perceptual_pairs(
+            _pool_hashes(m, blobs, decoded, uniq, backends),
+            max_hamming=m.max_hamming,
+            max_bucket=m.max_bucket,
+        )
+        pairs = pairs.unionByName(mpairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        pairs = pairs.unionByName(ipairs)
-
-    # 3c-audio (round 16, VERDICT r15 #5's pipeline leg): same contract
-    # as 3b-image for the AUDIO modality — WAV payloads hash into the
-    # identical (doc_id, dhash, ahash) shape, so the banded pairs union
-    # into the same component graph and every survivor policy applies
-    # to audio near-dups unchanged. Hashing restricted to the curated+
-    # exact-deduped pool; hash table pinned (2 longs/doc, one decode).
-    if audio_blobs is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            perceptual_pairs,
-        )
-
-        if ah_kept is not None:
-            # reuse the decon stage's decode pass (the ih_kept idiom)
-            ah = ah_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            ah = audio_hashes(
-                audio_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=audio_backend,
-            ).localCheckpoint()
-        apairs = perceptual_pairs(
-            ah,
-            max_hamming=audio_max_hamming,
-            max_bucket=audio_max_bucket,
-        ).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        pairs = pairs.unionByName(apairs)
-
-    # 3d-video (round 17, VERDICT r16 #1's pipeline leg): the third
-    # modality on the same component graph — container payloads hash
-    # into the identical (doc_id, dhash, ahash) shape, banded pairs
-    # union in, every survivor policy applies to video near-dups
-    # unchanged. Hashing restricted to the curated+exact-deduped pool;
-    # hash table pinned (2 longs/doc, one decode pass).
-    if video_blobs is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_pairs,
-            video_hashes,
-        )
-
-        if vh_kept is not None:
-            # reuse the decon stage's decode pass (the ih_kept idiom)
-            vh = vh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            vh = video_hashes(
-                video_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=video_backend,
-            ).localCheckpoint()
-        vpairs = perceptual_pairs(
-            vh,
-            max_hamming=video_max_hamming,
-            max_bucket=video_max_bucket,
-        ).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        pairs = pairs.unionByName(vpairs)
+        ))
     comp = connected_components(
         uniq.select("doc_id"), pairs, id_col="doc_id",
         scratch_dir=scratch_dir,
@@ -1076,20 +993,13 @@ def curate_incremental_batch(
     perceptual_index_path: str | None = None,
     benchmark_image_blobs: DataFrame | None = None,
     image_backend: str = "bmp",
-    image_max_hamming: int = 6,
-    image_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     new_audio_blobs: DataFrame | None = None,
     audio_index_path: str | None = None,
     benchmark_audio_blobs: DataFrame | None = None,
-    audio_backend: str = "wav",
-    audio_max_hamming: int = 6,
-    audio_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     new_video_blobs: DataFrame | None = None,
     video_index_path: str | None = None,
     benchmark_video_blobs: DataFrame | None = None,
     video_backend: str = "container",
-    video_max_hamming: int = 6,
-    video_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     bpe_merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Daily curation update: run the full curation contract for a NEW
@@ -1146,19 +1056,19 @@ def curate_incremental_batch(
     ``scratch_dir``: forwarded to the component step (see
     :func:`curate_training_data` — same conf fallback and cleanup).
 
-    ``new_image_blobs`` + ``perceptual_index_path`` (round 15, VERDICT
-    r14 #1/#7): image dedup for the daily loop. The batch's blobs are
-    decoded and hashed ONCE (restricted to docs that survived the text
-    stages so far); the retained corpus's images are touched only
-    through the stored 2-longs/doc hash index
-    (:func:`build_perceptual_index` — the corpus is never re-decoded).
-    Pairs touching the batch union into the same component graph, so
-    the component-level drop rule (any retained member ⇒ the new doc
-    drops) covers the image modality too. Requires the index when
-    image blobs are given — a recompute fallback would need the
-    CORPUS's blobs, which this path deliberately never reads.
-    ``exclude_batch_id`` prunes the index for replays like the other
-    two indexes.
+    **Modalities.** Each row of ``operators/multimodal.py:MODALITIES``
+    (image, audio, video) adds ``new_<m>_blobs`` (the batch's
+    payloads), ``<index>_index_path`` (the stored hash index built by
+    ``build_<index>_index``: ``perceptual_index_path`` for images),
+    ``benchmark_<m>_blobs`` and, where the table lists decode choices,
+    ``<m>_backend``. The batch's payloads decode ONCE, restricted to
+    docs still kept; decontamination runs at the full run's stage, and
+    the batch's hashes probe the stored index, so the retained corpus's
+    payloads are never decoded again. Probe pairs union into the same
+    component graph, so the component-level drop rule covers every
+    modality. Blobs need the index, or a benchmark for a decon-only run:
+    a recompute fallback would need the CORPUS's blobs, which this path
+    never reads. ``exclude_batch_id`` prunes the hash indexes too.
     """
     from data_pipeline_team5_spark.operators.components import (
         connected_components,
@@ -1199,85 +1109,16 @@ def curate_incremental_batch(
 
         kept = apply_frozen_quality_model(kept, quality_model)
 
-    # 1a-image. optional IMAGE-grain decontamination (round 15): the
-    # batch's kept pool decodes ONCE into a pinned hash table; the
-    # benchmark side is reference-sized. The table is reused by the
-    # image-dedup probe below (id semi-join), same as the full run.
-    nh_kept: DataFrame | None = None
-    if benchmark_image_blobs is not None:
-        if new_image_blobs is None:
-            raise ValueError(
-                "curate_incremental_batch: benchmark_image_blobs "
-                "requires new_image_blobs (the batch's images)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            perceptual_hashes,
-        )
-
-        nh_kept = perceptual_hashes(
-            new_image_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=image_backend,
-        ).localCheckpoint()
-        bh = perceptual_hashes(
-            benchmark_image_blobs, backend=image_backend
-        ).localCheckpoint()
-        bad = contaminated_image_ids(
-            nh_kept, bh, max_hamming=image_max_hamming
-        ).select("doc_id")
-        kept = kept.join(bad, "doc_id", "left_anti")
-
-    # 1a-audio (round 16): the audio twin — batch pool decodes once
-    # into a pinned hash table, reused by the audio index probe below.
-    anh_kept: DataFrame | None = None
-    if benchmark_audio_blobs is not None:
-        if new_audio_blobs is None:
-            raise ValueError(
-                "curate_incremental_batch: benchmark_audio_blobs "
-                "requires new_audio_blobs (the batch's audio)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            contaminated_image_ids,
-        )
-
-        anh_kept = audio_hashes(
-            new_audio_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=audio_backend,
-        ).localCheckpoint()
-        abh = audio_hashes(
-            benchmark_audio_blobs, backend=audio_backend
-        ).localCheckpoint()
-        abad = contaminated_image_ids(
-            anh_kept, abh, max_hamming=audio_max_hamming
-        ).select("doc_id")
-        kept = kept.join(abad, "doc_id", "left_anti")
-
-    # 1a-video (round 17): the video twin — batch pool decodes once
-    # into a pinned hash table, reused by the video index probe below.
-    vnh_kept: DataFrame | None = None
-    if benchmark_video_blobs is not None:
-        if new_video_blobs is None:
-            raise ValueError(
-                "curate_incremental_batch: benchmark_video_blobs "
-                "requires new_video_blobs (the batch's video)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            video_hashes,
-        )
-
-        vnh_kept = video_hashes(
-            new_video_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=video_backend,
-        ).localCheckpoint()
-        vbh = video_hashes(
-            benchmark_video_blobs, backend=video_backend
-        ).localCheckpoint()
-        vbad = contaminated_image_ids(
-            vnh_kept, vbh, max_hamming=video_max_hamming
-        ).select("doc_id")
-        kept = kept.join(vbad, "doc_id", "left_anti")
+    # 1a. optional payload decontamination, one pass per modality
+    blobs = {"image": new_image_blobs, "audio": new_audio_blobs,
+             "video": new_video_blobs}
+    bench_blobs = {"image": benchmark_image_blobs,
+                   "audio": benchmark_audio_blobs,
+                   "video": benchmark_video_blobs}
+    backends = {"image": image_backend, "video": video_backend}
+    kept, decoded = _modality_decon(
+        kept, blobs, bench_blobs, backends, batch=True
+    )
 
     # 2. exact dedup: within the batch, then anti-join the corpus's keys —
     # probed from the stored key table when available (O(batch) probe)
@@ -1317,126 +1158,38 @@ def curate_incremental_batch(
             threshold=neardup_threshold,
             max_bucket=PRODUCTION_MAX_BUCKET,
         )
-    if (
-        new_image_blobs is not None
-        and perceptual_index_path is None
-        and benchmark_image_blobs is None
-    ):
-        raise ValueError(
-            "curate_incremental_batch: new_image_blobs requires "
-            "perceptual_index_path (build_perceptual_index) — the "
-            "daily loop never re-decodes the retained corpus's "
-            "images — and/or benchmark_image_blobs (decon-only)"
-        )
-    if new_image_blobs is not None and perceptual_index_path is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_hashes,
-            perceptual_pairs_against_index,
-        )
+    # payload near-dups probe each modality's stored hash index; the
+    # retained corpus's payloads are never decoded again
+    from data_pipeline_team5_spark.operators.multimodal import (
+        perceptual_pairs_against_index,
+    )
 
-        idx = new_docs.sparkSession.read.parquet(perceptual_index_path)
-        if (
-            exclude_batch_id is not None
-            and "batch_id" in idx.columns
-        ):
+    index_paths = {"image": perceptual_index_path,
+                   "audio": audio_index_path, "video": video_index_path}
+    for m in MODALITIES.values():
+        path = index_paths[m.name]
+        if blobs[m.name] is None:
+            continue
+        if path is None:
+            if bench_blobs[m.name] is not None:
+                continue  # decon-only
+            raise ValueError(
+                f"curate_incremental_batch: new_{m.name}_blobs requires "
+                f"{m.index}_index_path (build_{m.index}_index) — the "
+                f"daily loop never re-decodes the retained corpus's "
+                f"{m.noun} — and/or benchmark_{m.name}_blobs (decon-only)"
+            )
+        idx = new_docs.sparkSession.read.parquet(path)
+        if exclude_batch_id is not None and "batch_id" in idx.columns:
             idx = idx.filter(F.col("batch_id") != exclude_batch_id)
-        if nh_kept is not None:  # reuse the decon stage's decode pass
-            nh = nh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            nh = perceptual_hashes(
-                new_image_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=image_backend,
-            ).localCheckpoint()
-        ipairs = perceptual_pairs_against_index(
-            nh,
+        mpairs = perceptual_pairs_against_index(
+            _pool_hashes(m, blobs, decoded, uniq, backends),
             idx.select("doc_id", "dhash", "ahash"),
-            max_hamming=image_max_hamming,
-            max_bucket=image_max_bucket,
+            max_hamming=m.max_hamming,
+            max_bucket=m.max_bucket,
         )
         raw_pairs = raw_pairs.select("doc_a", "doc_b").unionByName(
-            ipairs.select("doc_a", "doc_b")
-        )
-    # audio twin (round 16): the daily batch's WAVs probe the stored
-    # audio-hash index — the retained corpus's audio is never re-decoded
-    if (
-        new_audio_blobs is not None
-        and audio_index_path is None
-        and benchmark_audio_blobs is None
-    ):
-        raise ValueError(
-            "curate_incremental_batch: new_audio_blobs requires "
-            "audio_index_path (build_audio_index) — the daily loop "
-            "never re-decodes the retained corpus's audio — and/or "
-            "benchmark_audio_blobs (decon-only)"
-        )
-    if new_audio_blobs is not None and audio_index_path is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            perceptual_pairs_against_index,
-        )
-
-        aidx = new_docs.sparkSession.read.parquet(audio_index_path)
-        if (
-            exclude_batch_id is not None
-            and "batch_id" in aidx.columns
-        ):
-            aidx = aidx.filter(F.col("batch_id") != exclude_batch_id)
-        if anh_kept is not None:  # reuse the decon stage's decode
-            ah = anh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            ah = audio_hashes(
-                new_audio_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=audio_backend,
-            ).localCheckpoint()
-        apairs = perceptual_pairs_against_index(
-            ah,
-            aidx.select("doc_id", "dhash", "ahash"),
-            max_hamming=audio_max_hamming,
-            max_bucket=audio_max_bucket,
-        )
-        raw_pairs = raw_pairs.select("doc_a", "doc_b").unionByName(
-            apairs.select("doc_a", "doc_b")
-        )
-    # video twin (round 17): the daily batch's containers probe the
-    # stored video-hash index — retained corpus video never re-decodes
-    if (
-        new_video_blobs is not None
-        and video_index_path is None
-        and benchmark_video_blobs is None
-    ):
-        raise ValueError(
-            "curate_incremental_batch: new_video_blobs requires "
-            "video_index_path (build_video_index) — the daily loop "
-            "never re-decodes the retained corpus's video — and/or "
-            "benchmark_video_blobs (decon-only)"
-        )
-    if new_video_blobs is not None and video_index_path is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_pairs_against_index,
-            video_hashes,
-        )
-
-        vidx = new_docs.sparkSession.read.parquet(video_index_path)
-        if (
-            exclude_batch_id is not None
-            and "batch_id" in vidx.columns
-        ):
-            vidx = vidx.filter(F.col("batch_id") != exclude_batch_id)
-        if vnh_kept is not None:  # reuse the decon stage's decode
-            vh = vnh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            vh = video_hashes(
-                new_video_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=video_backend,
-            ).localCheckpoint()
-        vpairs = perceptual_pairs_against_index(
-            vh,
-            vidx.select("doc_id", "dhash", "ahash"),
-            max_hamming=video_max_hamming,
-            max_bucket=video_max_bucket,
-        )
-        raw_pairs = raw_pairs.select("doc_a", "doc_b").unionByName(
-            vpairs.select("doc_a", "doc_b")
+            mpairs.select("doc_a", "doc_b")
         )
     # localCheckpoint (round 17, guide §2.4): the verified pair list is
     # consumed by corpus_in_pairs (twice — src and dst legs), the
@@ -1528,6 +1281,32 @@ def bench_training_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate_training_data(docs)
 
 
+def write_store(
+    df: DataFrame,
+    path: str,
+    batch_id: str | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """Write ``df`` to a fold-store root. With ``batch_id`` (the daily
+    loop's form) the rows land as their own ``batch_id=<id>`` partition
+    with dynamic partition overwrite, so REPLAYING a batch replaces its
+    partition instead of appending duplicate rows — duplicate index rows
+    would double-count combined bucket membership in the probes'
+    ``max_bucket`` caps and silently drop true candidate pairs (ADVICE
+    r5 #2). Without it, a plain ``mode`` write, for callers with an
+    external exactly-once guarantee."""
+    if batch_id is None:
+        df.write.mode(mode).parquet(path)
+        return
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
 def build_signature_index(
     docs: DataFrame,
     path: str,
@@ -1546,14 +1325,7 @@ def build_signature_index(
     indexes in ~2.5 TB, independent of document length.
 
     Daily upkeep (probe, dedup, fold the batch in) should pass
-    ``batch_id`` (e.g. the ingest date): the batch is written as its own
-    partition with dynamic partition overwrite, so REPLAYING a batch
-    replaces its partition instead of appending duplicate signature rows —
-    duplicates would double-count combined bucket membership in
-    incremental_lsh_candidates' max_bucket cap and silently drop true
-    candidate pairs (ADVICE r5 #2). Bare ``mode="append"`` (no batch_id)
-    remains for callers with an external exactly-once guarantee.
-    """
+    ``batch_id`` (e.g. the ingest date) — see :func:`write_store`."""
     from data_pipeline_team5_spark.operators.dedup import (
         doc_shingles,
         minhash_signatures,
@@ -1562,110 +1334,35 @@ def build_signature_index(
     sig = minhash_signatures(
         doc_shingles(docs, id_col, text_col), num_perm=num_perm
     )
-    if batch_id is not None:
-        (
-            sig.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    else:
-        sig.write.mode(mode).parquet(path)
+    write_store(sig, path, batch_id, mode)
 
 
-def build_perceptual_index(
-    image_blobs: DataFrame,
+def build_hash_index(
+    modality: str,
+    blobs: DataFrame,
     path: str,
-    backend: str = "bmp",
+    backend: str | None = None,
     mode: str = "overwrite",
     batch_id: str | None = None,
 ) -> None:
-    """Materialize the corpus's perceptual-hash table (doc_id, dhash,
-    ahash) — the stored index the incremental image-dedup path probes
-    daily (round 15, VERDICT r14 #7; the image twin of
-    :func:`build_signature_index`).
-
-    One Arrow-batched decode+hash pass over the blobs (the expensive
-    step — exactly what the daily loop must never repeat for the
-    retained corpus), then a plain parquet write: 2 BIGINTs/doc, ~16
-    bytes — a 1e10-image corpus indexes in ~160 GB, independent of
-    image size. Same idempotent-replay contract as
-    ``build_signature_index`` via ``batch_id``."""
-    from data_pipeline_team5_spark.operators.multimodal import (
-        perceptual_hashes,
+    """Materialize the corpus's (doc_id, dhash, ahash) hash table for one
+    row of ``operators/multimodal.py:MODALITIES`` — the stored index the
+    incremental payload-dedup path probes daily. One Arrow-batched
+    decode+hash pass over the blobs (the expensive step, exactly what
+    the daily loop must never repeat for the retained corpus; for video
+    every frame decodes), then a plain parquet write: 2 BIGINTs/doc,
+    ~16 bytes — a 1e10-payload corpus indexes in ~160 GB, independent of
+    payload size. ``backend`` defaults to the table's; same idempotent
+    replay contract as :func:`build_signature_index` via ``batch_id``."""
+    m = MODALITIES[modality]
+    write_store(
+        m.hashes(blobs, backend=backend or m.backend), path, batch_id, mode
     )
 
-    h = perceptual_hashes(image_blobs, backend=backend)
-    if batch_id is not None:
-        (
-            h.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    else:
-        h.write.mode(mode).parquet(path)
 
-
-def build_audio_index(
-    audio_blobs: DataFrame,
-    path: str,
-    backend: str = "wav",
-    mode: str = "overwrite",
-    batch_id: str | None = None,
-) -> None:
-    """Materialize the corpus's audio-hash table (doc_id, dhash, ahash)
-    — the stored index the incremental audio-dedup path probes daily
-    (round 16; the audio twin of :func:`build_perceptual_index`, and
-    the same 2-BIGINTs/doc economics: the one decode pass is paid at
-    build/fold time, never per day)."""
-    from data_pipeline_team5_spark.operators.multimodal import (
-        audio_hashes,
-    )
-
-    h = audio_hashes(audio_blobs, backend=backend)
-    if batch_id is not None:
-        (
-            h.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    else:
-        h.write.mode(mode).parquet(path)
-
-
-def build_video_index(
-    video_blobs: DataFrame,
-    path: str,
-    backend: str = "container",
-    mode: str = "overwrite",
-    batch_id: str | None = None,
-) -> None:
-    """Materialize the corpus's video-hash table (doc_id, dhash, ahash)
-    — the stored index the incremental video-dedup path probes daily
-    (round 17; the video twin of :func:`build_perceptual_index`, same
-    2-BIGINTs/doc economics: the one container-decode pass — the
-    costliest of the three modalities, every frame decodes — is paid at
-    build/fold time, never per day)."""
-    from data_pipeline_team5_spark.operators.multimodal import (
-        video_hashes,
-    )
-
-    h = video_hashes(video_blobs, backend=backend)
-    if batch_id is not None:
-        (
-            h.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    else:
-        h.write.mode(mode).parquet(path)
+build_perceptual_index = functools.partial(build_hash_index, "image")
+build_audio_index = functools.partial(build_hash_index, "audio")
+build_video_index = functools.partial(build_hash_index, "video")
 
 
 def build_exact_key_index(
@@ -1682,16 +1379,7 @@ def build_exact_key_index(
     #2). 16 bytes/distinct key; same idempotent-replay contract as
     ``build_signature_index`` via ``batch_id``."""
     keys = docs.select(exact_key(text_col).alias("_key")).distinct()
-    if batch_id is not None:
-        (
-            keys.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    else:
-        keys.write.mode(mode).parquet(path)
+    write_store(keys, path, batch_id, mode)
 
 
 def append_corpus_batch(
@@ -1707,13 +1395,7 @@ def append_corpus_batch(
     reference docs whose text the verify stage cannot see — near-dups of
     folded survivors would be silently KEPT (ADVICE r6 #1; the loud
     runtime guard is in ``neardup_incremental_against_index``)."""
-    (
-        docs.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    write_store(docs, path, batch_id)
 
 
 def compact_fold_stores(
@@ -1906,11 +1588,13 @@ def bench_curate_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFr
     the corpus grows (tools/stress_10x.py measures that directly)."""
     import os
 
+    from data_pipeline_team5_spark import SCRATCH_DIR
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     index = docs.filter(F.col("doc_id") % 3 != 0)
     new = docs.filter(F.col("doc_id") % 3 == 0)
     tag = os.path.basename(sf_dir.rstrip("/"))
-    root = f"/root/repo/.scratch/bench_idx_{tag}"
+    root = os.path.join(SCRATCH_DIR, f"bench_idx_{tag}")
     sig, key = f"{root}/sig", f"{root}/key"
     if root not in _BENCH_IDX_BUILT:
         build_signature_index(index, sig)

@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_team5_spark import SCRATCH_DIR
 from data_pipeline_team5_spark.plans._facts import SESSION_ORACLE_SQL
 from data_pipeline_team5_spark.plans.catalog import register
 from data_pipeline_team5_spark.streaming.jobs import (
@@ -28,7 +29,7 @@ from data_pipeline_team5_spark.streaming.jobs import (
     upsert_daily,
 )
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = SCRATCH_DIR
 
 _QSUM_SQL = "CAST(SUM(CAST(floor(value * 1e6) AS BIGINT)) AS DOUBLE) / 1e6"
 

@@ -2008,7 +2008,7 @@ def test_cli_three_modality_full_and_fold(spark, tmp_path, capsys):
     ah = str(tmp_path / "ahash")
     vh = str(tmp_path / "vhash")
     _run(capsys, ["init-corpus", "--docs", p0, "--corpus", s["corpus"]])
-    _run(capsys, [
+    built = _run(capsys, [
         "build-index", "--docs", p0, "--sig", s["sig"],
         "--key", s["key"],
         "--image-blobs", str(tmp_path / "iblobs0.parquet"),
@@ -2018,14 +2018,26 @@ def test_cli_three_modality_full_and_fold(spark, tmp_path, capsys):
         "--video-blobs", str(tmp_path / "vblobs0.parquet"),
         "--video-index", vh,
     ])
-    summary = _run(capsys, _inc_argv(s, p1, "day1") + [
+    # every modality index path is reported
+    assert (built["perceptual"], built["audio_index"],
+            built["video_index"]) == (ih, ah, vh)
+    # the stream leg below folds the same day into a copy of the day-0
+    # stores
+    import shutil
+
+    stores = {"corpus": s["corpus"], "sig": s["sig"], "key": s["key"],
+              "ihash": ih, "ahash": ah, "vhash": vh}
+    st = {k: str(tmp_path / f"st_{k}") for k in stores}
+    for k, root in stores.items():
+        shutil.copytree(root, st[k])
+    modality_args = [
         "--benchmark", tbench,
-        "--image-blobs", iblobs, "--perceptual-index", ih,
-        "--image-benchmark", ibench,
-        "--audio-blobs", ablobs, "--audio-index", ah,
-        "--audio-benchmark", abench,
-        "--video-blobs", vblobs, "--video-index", vh,
-        "--video-benchmark", vbench,
+        "--image-blobs", iblobs, "--image-benchmark", ibench,
+        "--audio-blobs", ablobs, "--audio-benchmark", abench,
+        "--video-blobs", vblobs, "--video-benchmark", vbench,
+    ]
+    summary = _run(capsys, _inc_argv(s, p1, "day1") + modality_args + [
+        "--perceptual-index", ih, "--audio-index", ah, "--video-index", vh,
     ])
     kept = {
         r["doc_id"]
@@ -2062,6 +2074,39 @@ def test_cli_three_modality_full_and_fold(spark, tmp_path, capsys):
         os.path.join(s["out"], "_manifest", "day1.json")
     ))
     assert mf["fold"] == "day1" and mf["kept"] == 1
+
+    # `stream` runs the same fold body: the same day-1 file as one
+    # micro-batch against the copied day-0 stores lands the same
+    # assignments, the same six stores and the same manifest row, up to
+    # the fold's name (s0 instead of day1)
+    stage = str(tmp_path / "st_stage")
+    spark.read.parquet(p1).coalesce(1).write.parquet(stage)
+    arrivals = tmp_path / "st_arrivals"
+    arrivals.mkdir()
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(stage, part), arrivals / "day1.parquet")
+    st_out = str(tmp_path / "st_out")
+    res = _run(capsys, [
+        "stream", "--arrivals", str(arrivals), "--corpus", st["corpus"],
+        "--sig", st["sig"], "--key", st["key"], "--out", st_out,
+        "--perceptual-index", st["ihash"], "--audio-index", st["ahash"],
+        "--video-index", st["vhash"],
+    ] + modality_args)
+    assert res["batches"] == ["s0"]
+
+    def rows(root):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(root).drop("batch_id")
+            .collect()
+        )
+
+    assert rows(st_out) == rows(s["out"])
+    for k, root in stores.items():
+        assert rows(st[k]) == rows(root), k
+    smf = json.load(open(os.path.join(st_out, "_manifest", "s0.json")))
+    assert smf.pop("fold") == "s0"
+    mf.pop("fold")
+    assert smf == mf
 
 
 def test_cli_audio_benchmark_decon_only(spark, tmp_path, capsys):
