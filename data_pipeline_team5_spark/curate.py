@@ -780,6 +780,14 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "full" and _arg(args, bench_flag) and not has_blobs:
             ap.error(f"full: {bench_flag} requires {blobs_flag}")
 
+    if getattr(args, "report_drift", False) and args.fold_batch_id is None:
+        # refused before any work: the unfolded path would overwrite
+        # --out, the maintained assignments root of a fold loop
+        raise ValueError(
+            "--report-drift requires --fold-batch-id (drift is "
+            "defined against the maintained corpus root)"
+        )
+
     spark = get_spark(app_name=f"curate_{args.cmd}")
     bench_docs = (
         spark.read.parquet(args.benchmark)
@@ -1364,11 +1372,6 @@ def main(argv: list[str] | None = None) -> int:
             )
             if drift is not None:
                 manifest["quality_drift_tv"] = drift[0]
-            if args.report_drift:
-                raise ValueError(
-                    "--report-drift requires --fold-batch-id (drift is "
-                    "defined against the maintained corpus root)"
-                )
         else:
             manifest = _fold(fold, new, out, langid_probe)
         summary = {"status": "ok", "cmd": "incremental",

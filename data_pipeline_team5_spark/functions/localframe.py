@@ -8,7 +8,8 @@ a handful of driver-side rows. On ``local[32]`` that is 32 zero-input
 tasks at ~0.2 s each, multiplied by every re-evaluation of the plan —
 profiled at 28 task-seconds (4 × 32 tasks) in ``exact_quantile_panel``
 alone, 15 task-seconds in ``daily_metrics_panel``, 8.5 in
-``semantic_dedup``'s star list (tools/profile_bench.py, OPTIMIZATION_r17.md).
+``semantic_dedup``'s star list (``bench.py``'s profile pass,
+OPTIMIZATION_r17.md).
 
 Routing the same rows through Arrow (``createDataFrame(pandas_df,
 schema)`` with ``spark.sql.execution.arrow.pyspark.enabled=true`` — set by

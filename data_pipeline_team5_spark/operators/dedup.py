@@ -85,8 +85,7 @@ def dedup_exact(
 
 
 def doc_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3,
-    spread: bool = True,
+    df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """Long-format (doc_id, n, s) table — one row per distinct shingle, with
     the doc's set size ``n`` carried on every row; shingles pre-dedup'd per
@@ -97,22 +96,7 @@ def doc_shingles(
     whole-stage codegen compile ~8 copies of the regex machinery (measured
     ~5.7 s vs ~0.5 s of pure compile time on an otherwise-identical plan).
     """
-    # spread_small_scan (round 17, guide §2.5): tokenize+shingle is the
-    # regex-dense map work of every consumer, and a corpus that fits one
-    # file split runs it all in ONE task (profiled: 0.8-0.9 s serial
-    # stages inside ngram_jaccard_neardup / dup_ngram_fraction at sf0.1).
-    # Raw-file-scan inputs only (round 18: derived frames pass through —
-    # see spread_small_scan's gate) and a no-op whenever the scan is at
-    # least core-count wide — production scans are — so no extra shuffle
-    # is added at scale. ``spread=False`` opts a call site out entirely:
-    # the decontamination queries pin "no Exchange between the corpus-side
-    # gram explode and the broadcast join" as a structural scale invariant
-    # (tests/test_curation_extras.py) — their cost is the broadcast join,
-    # not tokenization, so the rebalance buys nothing there.
-    from data_pipeline_team5_spark.operators.skew import spread_small_scan
-
-    src = spread_small_scan(df) if spread else df
-    toked = src.select(
+    toked = df.select(
         F.col(id_col).alias("doc_id"), tokens_expr(text_col).alias("_t")
     )
     arr = toked.select(
@@ -225,12 +209,9 @@ def contaminated_ids(
         if bloom_route_min_grams is None
         else bloom_route_min_grams
     )
-    # spread=False (round 18): the probe is broadcast-join-bound, and the
-    # no-corpus-side-Exchange scale pin (tests/test_curation_extras.py)
-    # forbids a rebalance between the gram explode and the join.
-    sh = doc_shingles(docs, id_col, text_col, n=n, spread=False)
+    sh = doc_shingles(docs, id_col, text_col, n=n)
     bench_grams = (
-        doc_shingles(benchmark, id_col, text_col, n=n, spread=False)
+        doc_shingles(benchmark, id_col, text_col, n=n)
         .select("s")
         .distinct()
     )

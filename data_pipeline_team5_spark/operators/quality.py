@@ -52,14 +52,12 @@ def _bigram_frame(
 ) -> DataFrame:
     """(id, _g bigram array) with the tokens bound to a column first.
 
-    Round-18 note: spreading the input scan to core width
-    (spread_small_scan, the doc_shingles discipline) was tried here and
-    REVERTED on measurement — a steady-state A/B at sf0.1 put
-    lm_perplexity_filter at 4.32 s spread vs 2.24 s unspread (qcls 2.86
-    vs 2.38): the fit/score folds are light enough per row that the
-    round-robin exchange plus the extra AQE stage-job cost more than the
-    widened map work saved (the "serial 0.5 s scoring task" that
-    motivated the attempt was first-pass codegen compile, not compute).
+    The input scan is not rebalanced to core width: a steady-state A/B
+    at sf0.1 put lm_perplexity_filter at 4.32 s with a round-robin
+    rebalance vs 2.24 s without (qcls 2.86 vs 2.38). The fit/score folds
+    are light enough per row that the exchange plus the extra AQE
+    stage-job cost more than the widened map work saved; the serial
+    scoring task was first-pass codegen compile, not compute.
     Details in OPTIMIZATION_r18.md."""
     from data_pipeline_team5_spark.operators.textops import (
         ngrams_expr,

@@ -471,8 +471,8 @@ def kmeans_fit(
     # kmeans input is corpus-sized, and pq_fit/knn_pq would otherwise
     # retain 4-8 corpus pins per call) — the returned final assignment
     # is built over the caller's original frame, paying one ordinary
-    # scan. NOT spread: an A/B (OPTIMIZATION_r18.md) measured
-    # spread_small_scan here as a steady-state loss — the serial-looking
+    # scan. NOT rebalanced: an A/B (OPTIMIZATION_r18.md) measured a
+    # round-robin rebalance here as a steady-state loss — the serial-looking
     # first-pass assign stage was codegen compile (the per-iteration
     # centroid literals force a recompile), not compute, so widening the
     # pin bought nothing and paid a shuffle.

@@ -88,81 +88,3 @@ def salted_join(
     out = p.join(b, on=[key, "_salt"], how=how)
     return out.drop("_salt")
 
-
-def _narrow_leaf(df: DataFrame) -> tuple[str, int] | None:
-    """Classify ``df`` when its optimized logical plan is a narrow
-    Project/Filter chain over ONE leaf; ``None`` for anything else
-    (joins, aggregates, unions, local frames).
-
-    Returns ``("bytes", n)`` for a file relation (n = relation file
-    bytes, from the already-resolved file index) or ``("parts", n)`` for
-    a checkpointed RDD (n = its realized partition count, read off the
-    LogicalRDD node — the layer ranks._pin's release handle uses).
-
-    Round 18 (ADVICE r17): the round-17 width probe was
-    ``df.rdd.getNumPartitions()``, which under AQE materializes every
-    upstream shuffle stage as real jobs at plan-build time — for a
-    join-derived input the join subtree executed TWICE per call. Walking
-    the optimized logical plan costs only analysis (no jobs).
-    """
-    try:
-        node = df._jdf.queryExecution().optimizedPlan()
-        while True:
-            name = node.getClass().getSimpleName()
-            if name in ("Project", "Filter"):
-                children = node.children()
-                if children.size() != 1:
-                    return None
-                node = children.apply(0)
-                continue
-            if name == "LogicalRelation":
-                return ("bytes", int(str(node.stats().sizeInBytes())))
-            if name == "LogicalRDD":
-                return ("parts", int(node.rdd().getNumPartitions()))
-            return None
-    except Exception:
-        return None
-
-
-def spread_small_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Guarantee at least core-count partitions under a COMPUTE-dense
-    operator whose input is bytes-tiny (round 17, guide §2.5/§1.2).
-
-    File-source parallelism is sized by bytes (``maxPartitionBytes``), so
-    a scan small enough to fit one split runs any downstream map-side
-    work — a broadcast nested-loop cosine sweep, a literal-centroid
-    argmin — in ONE task regardless of core count (profiled: a serial
-    1.9 s stage inside hard_negative_mining at sf0.1 where per-row work
-    is |queries| × dim flops).
-
-    Applies ONLY to raw file scans and checkpoint pins (``_narrow_leaf``);
-    other derived frames pass through untouched — a join/agg output
-    already sits at shuffle-partition width, and probing its width would
-    execute its subtree (ADVICE r17). For file relations the width gate
-    mirrors Spark's own ``FilePartition`` split math instead of running
-    it: splits are floored at ``spark.sql.files.openCostInBytes`` per
-    core, so a scan of S bytes realizes ≥ ``min_parts`` tasks exactly
-    when S ≥ min_parts × openCost. For pinned frames (``localCheckpoint``
-    → LogicalRDD — e.g. the exact-dedup survivor layer the curation
-    jaccard pass shingles) the realized partition count is read straight
-    off the plan node. At production input sizes both are wide and this
-    is a NO-OP — no extra shuffle at scale; only the
-    byte-tiny-but-compute-heavy regime pays one round-robin rebalance of
-    its already-tiny input. Results are partitioning-independent by
-    contract of every caller (algebraic aggregates / per-row projections
-    only).
-    """
-    spark = df.sparkSession
-    want = min_parts or spark.sparkContext.defaultParallelism
-    leaf = _narrow_leaf(df)
-    if leaf is None:
-        return df
-    kind, n = leaf
-    if kind == "parts":
-        return df if n >= want else df.repartition(want)
-    open_cost = int(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-    )
-    if n >= want * open_cost:
-        return df
-    return df.repartition(want)

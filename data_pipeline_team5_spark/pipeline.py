@@ -188,6 +188,51 @@ def exact_key(text_col: str = "text") -> Column:
     return F.md5(F.substring(norm_text(text_col), 1, 40))
 
 
+def _verify_candidates(
+    cand: DataFrame,
+    docs: list[DataFrame],
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    check: Callable[[DataFrame, DataFrame], None] | None = None,
+) -> DataFrame:
+    """Exact-Jaccard verification of LSH candidate pairs ``cand`` against
+    the union of the ``docs`` frames' (``id_col``, ``text_col``): the one
+    probe-and-verify body of every near-dup entry point.
+
+    ``docs`` is touched only through a left-semi join against the
+    candidate ids BEFORE shingling (operators/dedup.py:candidate_docs), so
+    verification shingles O(candidate docs), not O(corpus). Both inputs
+    are pinned, and both pins are bounded by the capped buckets, never
+    corpus-sized:
+
+    - the candidate pairs feed the semi-join and the verify join; without
+      the pin the signature and banding subtree would run twice;
+    - the candidate docs: the verify plan embeds their shingle table twice
+      (doc_a and doc_b legs), and without a cut each leg re-derives the
+      semi-join over the corpus (four corpus scans in the executed plan).
+
+    ``check(cand, ver)`` runs over the two pinned frames before the
+    (lazy) verify join is built.
+    """
+    from data_pipeline_team5_spark.operators.dedup import (
+        candidate_docs,
+        doc_shingles,
+        verify_jaccard,
+    )
+
+    text = functools.reduce(
+        DataFrame.unionByName, [d.select(id_col, text_col) for d in docs]
+    )
+    cand = cand.localCheckpoint()
+    ver = candidate_docs(cand, text, id_col).localCheckpoint()
+    if check is not None:
+        check(cand, ver)
+    return verify_jaccard(
+        cand, doc_shingles(ver, id_col, text_col), threshold
+    )
+
+
 def neardup_production_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -196,9 +241,10 @@ def neardup_production_pairs(
     method: str = "lsh",
     n_docs: int | None = None,
 ) -> DataFrame:
-    """The GUARDED near-dup pipeline a production run actually ships
-    (VERDICT r4 #4 — the guards existed and were tested, but no entry point
-    invoked them). Returns ``(doc_a, doc_b, jaccard)`` pairs ≥ ``threshold``.
+    """The GUARDED near-dup pipeline a production run actually ships (the
+    guards are tested on their own, and this is the entry point that
+    invokes them). Returns ``(doc_a, doc_b, jaccard)`` pairs ≥
+    ``threshold``.
 
     - ``method="jaccard"``: inverted-shingle-index exact Jaccard with the
       stop-shingle guard ``production_max_doc_freq(n_docs)`` wired in — the
@@ -207,12 +253,11 @@ def neardup_production_pairs(
     - ``method="lsh"``: MinHash signatures over the full shingle sets,
       banded candidate generation capped at ``PRODUCTION_MAX_BUCKET``, then
       exact-Jaccard verification against the full sets of CANDIDATE DOCS
-      ONLY — the corpus is left-semi-joined to the candidate ids before the
-      verify-side shingle pass (operators/dedup.py:candidate_docs), so the
-      corpus pays its regex shingling once (for signatures), not twice.
-      (The doc-freq guard applies to the inverted-index path only:
-      signatures and verification want true sets, bucket capping already
-      bounds LSH skew.)
+      ONLY (:func:`_verify_candidates`), so the corpus pays its regex
+      shingling once (for signatures), not twice. (The doc-freq guard
+      applies to the inverted-index path only: signatures and
+      verification want true sets, bucket capping already bounds LSH
+      skew.)
 
     ``n_docs`` sizes the stop-shingle guard; pass it when the corpus size
     is already known (a catalog stat, a previous stage's count) to skip the
@@ -224,13 +269,11 @@ def neardup_production_pairs(
     """
     from data_pipeline_team5_spark.operators.dedup import (
         PRODUCTION_MAX_BUCKET,
-        candidate_docs,
         doc_shingles,
         jaccard_pairs,
         lsh_candidate_pairs,
         minhash_signatures,
         production_max_doc_freq,
-        verify_jaccard,
     )
 
     sh = doc_shingles(docs, id_col, text_col)
@@ -244,20 +287,8 @@ def neardup_production_pairs(
         sig = minhash_signatures(sh, num_perm=32, seed=42)
         cand = lsh_candidate_pairs(
             sig, num_perm=32, bands=8, max_bucket=PRODUCTION_MAX_BUCKET
-        ).localCheckpoint()
-        # localCheckpoint (round 18, guide §2.4 — the against_index
-        # convention): the returned verify plan embeds the shingle table
-        # TWICE (doc_a and doc_b legs), and without a cut each leg
-        # re-derives the corpus semi-join — the r17 executed plan carried
-        # two full candidate-docs subtrees with four corpus scans. The
-        # pin holds only candidate docs (bounded by capped buckets),
-        # never the corpus.
-        ver = candidate_docs(
-            cand, docs.select(id_col, text_col), id_col
-        ).localCheckpoint()
-        return verify_jaccard(
-            cand, doc_shingles(ver, id_col, text_col), threshold
         )
+        return _verify_candidates(cand, [docs], id_col, text_col, threshold)
     raise ValueError(f"unknown near-dup method: {method!r}")
 
 
@@ -1620,31 +1651,25 @@ def neardup_incremental_against_index(
     """The deployed form of ``neardup_incremental_pairs``: index signatures
     come from the stored table (built by ``build_signature_index``) instead
     of being recomputed, so the daily cost is one pass over the NEW batch
-    plus the bucket-key probe. ``index_docs`` is touched only through a
-    left-semi join against the candidate pairs' doc ids BEFORE shingling
-    (operators/dedup.py:candidate_docs), so verification too shingles
-    O(candidate docs), not O(corpus) — the whole run is O(batch +
-    candidates), independent of corpus size. Bitwise-equal to the recompute
-    form (tests/test_incremental_neardup.py).
+    plus the bucket-key probe, and verification shingles O(candidate docs)
+    (:func:`_verify_candidates`) — the whole run is O(batch + candidates),
+    independent of corpus size. Bitwise-equal to the recompute form
+    (tests/test_incremental_neardup.py).
 
     Precondition (guarded loudly below): ``index_docs`` must contain the
     TEXT of every doc in the stored signature index. A caller that folds
     daily survivors into the index but keeps passing a stale corpus would
     otherwise produce candidate pairs whose corpus side has no text —
     verify_jaccard's inner shingle join silently drops such pairs, and
-    near-dups of previously folded survivors would be KEPT (ADVICE r6 #1).
+    near-dups of previously folded survivors would be KEPT.
     """
     from data_pipeline_team5_spark.operators.dedup import (
-        candidate_docs,
         doc_shingles,
         incremental_lsh_candidates,
         minhash_signatures,
-        verify_jaccard,
     )
 
-    spark = new_docs.sparkSession
-    new_sh = doc_shingles(new_docs, id_col, text_col)
-    index_sig = spark.read.parquet(index_sig_path)
+    index_sig = new_docs.sparkSession.read.parquet(index_sig_path)
     if exclude_batch_id is not None and "batch_id" in index_sig.columns:
         # replay support: drop the replayed day's own partition
         # (partition-pruned read — see curate_incremental_batch docstring)
@@ -1661,62 +1686,53 @@ def neardup_incremental_against_index(
             f"{stored_perm} permutations, probe expects {num_perm} — "
             "rebuild the index or pass matching num_perm"
         )
-    # localCheckpoint: the candidate set (small — capped buckets) feeds both
-    # the semi-join below and the verify join; without it the whole
-    # signature+probe subtree would execute twice.
+
+    def check_coverage(cand: DataFrame, ver: DataFrame) -> None:
+        # Loud stale-corpus guard: every id appearing in a candidate pair
+        # must have text in new ∪ index_docs. A shortfall means the stored
+        # index knows docs the caller's corpus no longer carries (e.g.
+        # survivors folded into the index while the corpus stayed
+        # static); proceeding would silently KEEP near-dups of those docs,
+        # because verify_jaccard's inner join drops textless pairs. ONE
+        # aggregation job over the two pinned frames: the daily path is
+        # job-floor-bound, and one union-agg answers both counts.
+        counts = (
+            cand.select(F.col("doc_a").alias(id_col))
+            .unionByName(cand.select(F.col("doc_b").alias(id_col)))
+            .distinct()
+            .withColumn("_src", F.lit("pair"))
+            .unionByName(
+                ver.select(id_col).distinct().withColumn("_src", F.lit("cov"))
+            )
+            .groupBy("_src")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        by_src = {r["_src"]: r["n"] for r in counts}
+        n_pair_ids = by_src.get("pair", 0)
+        n_covered = by_src.get("cov", 0)
+        if n_covered < n_pair_ids:
+            raise ValueError(
+                f"signature index at {index_sig_path} yielded candidate "
+                f"pairs over {n_pair_ids} distinct docs but only "
+                f"{n_covered} have text in new_docs ∪ index_docs — the "
+                "corpus is stale relative to the index (fold survivors "
+                "into the corpus too, or rebuild the index from the "
+                "corpus actually passed)"
+            )
+
     cand = incremental_lsh_candidates(
-        minhash_signatures(new_sh, num_perm=num_perm),
+        minhash_signatures(
+            doc_shingles(new_docs, id_col, text_col), num_perm=num_perm
+        ),
         index_sig,
         num_perm=num_perm,
         bands=bands,
         max_bucket=max_bucket,
-    ).localCheckpoint()
-    # localCheckpoint: ver (the candidate docs — small by construction) is
-    # materialized once so (a) the verify join reads a tiny checkpointed
-    # input instead of re-deriving the corpus∪new semi-join, and (b) the
-    # coverage guard below costs one aggregation over checkpointed rows,
-    # not extra corpus scans.
-    ver = candidate_docs(
-        cand,
-        new_docs.select(id_col, text_col).unionByName(
-            index_docs.select(id_col, text_col)
-        ),
-        id_col,
-    ).localCheckpoint()
-    # Loud stale-corpus guard (ADVICE r6 #1): every id appearing in a
-    # candidate pair must have text in new ∪ index_docs. A shortfall means
-    # the stored index knows docs the caller's corpus no longer carries
-    # (e.g. survivors folded into the index while the corpus stayed
-    # static); proceeding would silently KEEP near-dups of those docs,
-    # because verify_jaccard's inner join drops textless pairs.
-    # ONE aggregation job over the two pinned frames (round 18, guide
-    # §1.2 — the daily path is job-floor-bound: two sequential counts
-    # were two jobs where one union-agg answers both).
-    counts = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .unionByName(cand.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-        .withColumn("_src", F.lit("pair"))
-        .unionByName(
-            ver.select(id_col).distinct().withColumn("_src", F.lit("cov"))
-        )
-        .groupBy("_src")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
     )
-    by_src = {r["_src"]: r["n"] for r in counts}
-    n_pair_ids = by_src.get("pair", 0)
-    n_covered = by_src.get("cov", 0)
-    if n_covered < n_pair_ids:
-        raise ValueError(
-            f"signature index at {index_sig_path} yielded candidate pairs "
-            f"over {n_pair_ids} distinct docs but only {n_covered} have "
-            "text in new_docs ∪ index_docs — the corpus is stale relative "
-            "to the index (fold survivors into the corpus too, or rebuild "
-            "the index from the corpus actually passed)"
-        )
-    return verify_jaccard(
-        cand, doc_shingles(ver, id_col, text_col), threshold
+    return _verify_candidates(
+        cand, [new_docs, index_docs], id_col, text_col, threshold,
+        check=check_coverage,
     )
 
 
@@ -1727,7 +1743,6 @@ def bench_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_team5_spark.operators.dedup import (
         PRODUCTION_MAX_BUCKET,
     )
-    from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -1756,52 +1771,33 @@ def neardup_incremental_pairs(
 
     This is the daily-ingest shape at 100 TB: signature cost is one pass
     over the NEW docs plus a bucket-key join probe into the index — the
-    corpus is never re-paired. Verification shingles ONLY docs that appear
-    in a candidate pair: the corpus is left-semi-joined against the
-    candidate ids BEFORE the regex-shingle pass (operators/dedup.py:
-    candidate_docs), so the verify stage is linear in candidates, not in
-    corpus size. This recompute form still pays one corpus pass for the
-    index signatures; ``neardup_incremental_against_index`` reads them from
-    the stored table instead, which is the deployed O(batch + candidates)
-    path.
+    corpus is never re-paired, and verification shingles only candidate
+    docs (:func:`_verify_candidates`). This recompute form still pays one
+    corpus pass for the index signatures;
+    ``neardup_incremental_against_index`` reads them from the stored table
+    instead, which is the deployed O(batch + candidates) path.
 
     Equivalence contract (pinned in tests/test_incremental_neardup.py):
     full-corpus pairs == within(index) ∪ incremental(new vs index), and
     every incremental pair touches a new doc.
     """
     from data_pipeline_team5_spark.operators.dedup import (
-        candidate_docs,
         doc_shingles,
         incremental_lsh_candidates,
         minhash_signatures,
-        verify_jaccard,
     )
 
     new_sh = doc_shingles(new_docs, id_col, text_col)
     idx_sh = doc_shingles(index_docs, id_col, text_col)
-    # localCheckpoint: see neardup_incremental_against_index — reused by the
-    # semi-join and the verify join without re-running signatures twice.
     cand = incremental_lsh_candidates(
         minhash_signatures(new_sh, num_perm=num_perm),
         minhash_signatures(idx_sh, num_perm=num_perm),
         num_perm=num_perm,
         bands=bands,
         max_bucket=max_bucket,
-    ).localCheckpoint()
-    # localCheckpoint (round 18, guide §2.4 — the against_index
-    # convention): the verify plan embeds the shingle table twice (doc_a
-    # and doc_b legs); without a cut each leg re-derives the
-    # corpus∪new semi-join — four corpus scans in the r17 executed plan.
-    # Candidate-docs-sized pin, never corpus-sized.
-    ver = candidate_docs(
-        cand,
-        new_docs.select(id_col, text_col).unionByName(
-            index_docs.select(id_col, text_col)
-        ),
-        id_col,
-    ).localCheckpoint()
-    return verify_jaccard(
-        cand, doc_shingles(ver, id_col, text_col), threshold
+    )
+    return _verify_candidates(
+        cand, [new_docs, index_docs], id_col, text_col, threshold
     )
 
 

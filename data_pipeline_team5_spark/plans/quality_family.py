@@ -442,18 +442,11 @@ HARDNEG_RES = 3
     tags=("quality", "embedding", "contrastive", "mining"),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_team5_spark.operators.skew import spread_small_scan
-
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    # spread_small_scan (round 17, guide §2.5): the pair sweep is
-    # |corpus| × |queries| × dim flops over a bytes-tiny scan — one
-    # split at sf0.1, so the whole sweep ran as ONE serial 1.9 s task.
-    # No-op once the scan is wide (production inputs).
-    emb_wide = spread_small_scan(emb)
     q = emb.filter(
         F.col("vec_id") % HARDNEG_MOD == HARDNEG_RES
     ).select(
@@ -462,7 +455,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
     )
     pairs = (
-        emb_wide.crossJoin(F.broadcast(q))
+        emb.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("q_label"))
         .select(
             "q_id",

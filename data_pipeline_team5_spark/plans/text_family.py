@@ -136,12 +136,7 @@ _S = sentiment_sql("t")
     ),
 )
 def text_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_team5_spark.operators.skew import spread_small_scan
-
-    # spread_small_scan (round 17, guide §2.5): the profile is pure
-    # regex/HOF map work per doc, and a one-split corpus ran ALL of it in
-    # one 2.4 s serial task at sf0.1; no-op once the scan is wide.
-    docs = spread_small_scan(table(spark, sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     # Tokens / gram arrays projected once — inlining the normalize+split
     # chain at every use site multiplies codegen compile time (see
     # operators/dedup.py).
@@ -498,11 +493,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_team5_spark.operators.dedup import doc_shingles
 
     docs = table(spark, sf_dir, "documents")
-    # spread=False (round 18, VERDICT r17 #1): this query is broadcast-
-    # join-bound, not tokenize-bound (flat with the spread in r17), and
-    # its scale pin forbids any Exchange between the corpus-side gram
-    # explode and the broadcast join.
-    sh = doc_shingles(docs, "doc_id", "text", n=DECON_N, spread=False)
+    sh = doc_shingles(docs, "doc_id", "text", n=DECON_N)
     is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
     bench_grams = sh.filter(is_bench).select("s").distinct()
     train = sh.filter(~is_bench)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -636,7 +637,8 @@ def test_cli_full_survivor_policy_flag(spark, tmp_path, capsys):
 def test_cli_incremental_report_drift(spark, tmp_path, capsys):
     """`curate incremental --fold-batch-id D --report-drift` appends the
     post-fold TV drift (folded corpus vs pre-fold corpus) to the daily
-    summary line; without --fold-batch-id it refuses."""
+    summary line; without --fold-batch-id it refuses before any work, so
+    the maintained ``--out`` root it names stays byte-for-byte intact."""
     docs, paths = _days(spark, tmp_path)
     s = _store_args(tmp_path)
     _run(capsys, ["init-corpus", "--docs", paths["day0"],
@@ -648,10 +650,19 @@ def test_cli_incremental_report_drift(spark, tmp_path, capsys):
     assert set(r["drift_tv"]) == {"lang", "len"}
     assert all(0.0 <= v <= 1.0 for v in r["drift_tv"].values())
 
+    def tree(root):
+        return {
+            p.relative_to(root): p.read_bytes()
+            for p in sorted(Path(root).rglob("*")) if p.is_file()
+        }
+
+    before = tree(s["out"])
+    assert before
     with pytest.raises(ValueError, match="report-drift"):
         main(["incremental", "--new", paths["day2"],
               "--corpus", s["corpus"], "--sig", s["sig"],
               "--key", s["key"], "--out", s["out"], "--report-drift"])
+    assert tree(s["out"]) == before
 
 
 def test_shard_subcommand_reproducible(spark, tmp_path, capsys):
