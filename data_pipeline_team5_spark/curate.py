@@ -469,46 +469,51 @@ def _parser() -> argparse.ArgumentParser:
                             "(default 'base' keeps the root fold-safe)")
     _add_modality_flags(p_idx, "build-index")
 
-    p_inc = sub.add_parser("incremental", help="curate a daily batch")
-    p_inc.add_argument("--new", required=True, help="new batch parquet")
-    p_inc.add_argument("--corpus", required=True,
+    # the flags `incremental` and `stream` share: the maintained stores,
+    # the curation knobs, the frozen models and the modality flags
+    daily = argparse.ArgumentParser(add_help=False)
+    daily.add_argument("--corpus", required=True,
                        help="retained corpus parquet/root (text read only "
-                            "for candidate docs). With --fold-batch-id "
-                            "this must be the MAINTAINED root the fold "
-                            "appends to (seed it with init-corpus)")
-    p_inc.add_argument("--sig", required=True)
-    p_inc.add_argument("--key", required=True)
-    p_inc.add_argument("--out", required=True,
-                       help="assignments parquet; with --fold-batch-id, a "
+                            "for candidate docs). A fold appends to it, so "
+                            "with --fold-batch-id and in stream this must "
+                            "be the MAINTAINED root (seed it with "
+                            "init-corpus)")
+    daily.add_argument("--sig", required=True)
+    daily.add_argument("--key", required=True)
+    daily.add_argument("--out", required=True,
+                       help="assignments parquet; when folding, a "
                             "maintained root accumulating one batch_id "
-                            "partition per day with globally-unique bins")
-    p_inc.add_argument("--budget", type=int, default=2048)
-    p_inc.add_argument("--threshold", type=float, default=0.6)
-    p_inc.add_argument("--benchmark", default=None,
-                        help="eval-benchmark documents parquet; the daily "
-                             "batch is decontaminated against it before "
-                             "dedup")
-    p_inc.add_argument("--quality-model", default=None,
+                            "partition per fold with globally-unique bins")
+    daily.add_argument("--budget", type=int, default=2048)
+    daily.add_argument("--threshold", type=float, default=0.6)
+    daily.add_argument("--benchmark", default=None,
+                       help="eval-benchmark documents parquet; each batch "
+                            "is decontaminated against it before dedup")
+    daily.add_argument("--quality-model", default=None,
                        help="frozen quality-model JSON (from full "
                             "--quality-model-out): applies the saved "
                             "classifier threshold and LM cutoff to each "
                             "batch — never a per-batch refit/tertile")
-    p_inc.add_argument("--langid-model", default=None,
+    daily.add_argument("--langid-model", default=None,
                        help="frozen langid-model JSON (from full "
                             "--langid-fill --langid-model-out): fills "
-                            "the batch's NULL langs under the full "
-                            "run's models BEFORE the allowlist — never "
-                            "a per-batch refit")
-    p_inc.add_argument("--bpe-merges", default=None,
+                            "each batch's NULL langs under the full run's "
+                            "models BEFORE the allowlist — never a "
+                            "per-batch refit")
+    daily.add_argument("--bpe-merges", default=None,
                        help="frozen BPE merge-table JSON (from full "
-                            "--bpe-fit --bpe-merges-out): sizes the "
+                            "--bpe-fit --bpe-merges-out): sizes each "
                             "batch's bins under the FULL run's learned "
                             "vocabulary — never a per-batch refit")
-    p_inc.add_argument("--decon-n", type=int, default=5,
+    daily.add_argument("--decon-n", type=int, default=5,
                        help="see full --decon-n")
-    p_inc.add_argument("--decon-bloom-min-grams", type=int, default=None,
+    daily.add_argument("--decon-bloom-min-grams", type=int, default=None,
                        help="see full --decon-bloom-min-grams")
-    _add_modality_flags(p_inc, "incremental")
+    _add_modality_flags(daily, "incremental")
+
+    p_inc = sub.add_parser("incremental", parents=[daily],
+                           help="curate a daily batch")
+    p_inc.add_argument("--new", required=True, help="new batch parquet")
     p_inc.add_argument("--fold-batch-id", default=None,
                        help="after curating, fold the batch's SURVIVORS "
                             "into the signature index, key index, AND the "
@@ -523,6 +528,7 @@ def _parser() -> argparse.ArgumentParser:
 
     p_str = sub.add_parser(
         "stream",
+        parents=[daily],
         help="continuous loop: curate+fold each arrival file as its own "
              "micro-batch",
     )
@@ -531,39 +537,6 @@ def _parser() -> argparse.ArgumentParser:
                             "non-empty so the stream schema can be "
                             "inferred); each file becomes one micro-batch "
                             "in arrival order")
-    p_str.add_argument("--corpus", required=True,
-                       help="MAINTAINED retained-corpus root (seed with "
-                            "init-corpus); every micro-batch folds its "
-                            "survivors in")
-    p_str.add_argument("--sig", required=True)
-    p_str.add_argument("--key", required=True)
-    p_str.add_argument("--out", required=True,
-                       help="maintained assignments root: one batch_id=sN "
-                            "partition per micro-batch, bins globally "
-                            "unique")
-    p_str.add_argument("--budget", type=int, default=2048)
-    p_str.add_argument("--threshold", type=float, default=0.6)
-    p_str.add_argument("--benchmark", default=None)
-    p_str.add_argument("--quality-model", default=None,
-                       help="frozen quality-model JSON (from full "
-                            "--quality-model-out): applies the saved "
-                            "classifier threshold and LM cutoff to each "
-                            "batch — never a per-batch refit/tertile")
-    p_str.add_argument("--langid-model", default=None,
-                       help="frozen langid-model JSON: fills each "
-                            "micro-batch's NULL langs under the full "
-                            "run's models (see incremental "
-                            "--langid-model)")
-    p_str.add_argument("--bpe-merges", default=None,
-                       help="frozen BPE merge-table JSON: sizes each "
-                            "micro-batch's bins under the full run's "
-                            "learned vocabulary (see incremental "
-                            "--bpe-merges)")
-    _add_modality_flags(p_str, "stream")
-    p_str.add_argument("--decon-n", type=int, default=5,
-                       help="see full --decon-n")
-    p_str.add_argument("--decon-bloom-min-grams", type=int, default=None,
-                       help="see full --decon-bloom-min-grams")
     p_str.add_argument("--checkpoint", default=None,
                        help="streaming checkpoint dir (default "
                             "<out>_ckpt). PERSISTENT on purpose: a rerun "
@@ -685,6 +658,7 @@ def main(argv: list[str] | None = None) -> int:
         curate_incremental_batch,
         curate_training_data,
         next_bin_offset,
+        read_store,
         write_store,
     )
     from data_pipeline_team5_spark.operators.dedup import (
@@ -730,33 +704,19 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 0
 
-    if getattr(args, "quality_model_out", None) and not getattr(
-        args, "quality_reference", None
+    # an output file whose model is never fit would be silently skipped,
+    # leaving the daily loop without the file the operator asked for —
+    # fail loudly at parse time
+    for flag, needs, why in (
+        ("--quality-model-out", "--quality-reference",
+         "no quality model is fit without a reference corpus"),
+        ("--langid-model-out", "--langid-fill",
+         "no langid model is fit without the fill stage"),
+        ("--bpe-merges-out", "--bpe-fit",
+         "no merge table is fit without the fit stage"),
     ):
-        # ADVICE r14: without a reference no model is fit, so the save
-        # would be silently skipped and the daily loop left without the
-        # file the operator asked for — fail loudly at parse time.
-        ap.error(
-            "--quality-model-out requires --quality-reference "
-            "(no quality model is fit without a reference corpus)"
-        )
-    if getattr(args, "langid_model_out", None) and not getattr(
-        args, "langid_fill", False
-    ):
-        # same failure mode: without the fill no langid model is fit,
-        # so the save would be silently skipped
-        ap.error(
-            "--langid-model-out requires --langid-fill "
-            "(no langid model is fit without the fill stage)"
-        )
-    if getattr(args, "bpe_merges_out", None) and not getattr(
-        args, "bpe_fit", False
-    ):
-        # same failure mode: without the fit no merge table exists
-        ap.error(
-            "--bpe-merges-out requires --bpe-fit "
-            "(no merge table is fit without the fit stage)"
-        )
+        if _arg(args, flag) and not _arg(args, needs):
+            ap.error(f"{flag} requires {needs} ({why})")
     for m in MODALITIES.values():
         blobs_flag, bench_flag = f"--{m.name}-blobs", f"--{m.name}-benchmark"
         index_flag = _index_flag(m, args.cmd)
@@ -867,14 +827,9 @@ def main(argv: list[str] | None = None) -> int:
                     filled, langid_fill_hist
                 )
             new = filled.drop("lang_source")
-        corpus = spark.read.parquet(args.corpus)
-        if fold is not None and "batch_id" in corpus.columns:
-            # replay safety: a crashed day D re-run must not see its own
-            # previously folded survivors in the corpus or the indexes
-            corpus = corpus.filter(F.col("batch_id") != fold)
         out = curate_incremental_batch(
             new,
-            corpus,
+            read_store(spark, args.corpus, fold),
             token_budget=args.budget,
             neardup_threshold=args.threshold,
             index_sig_path=args.sig,
@@ -900,10 +855,10 @@ def main(argv: list[str] | None = None) -> int:
         asked, and writes the fold's manifest row, which it returns."""
         off = next_bin_offset(spark, args.out, exclude_batch_id=fold)
         placed = out.withColumn("bin_id", F.col("bin_id") + F.lit(off))
-        write_store(placed, args.out, fold)
-        kept = _read_fold_kept(spark, args.out, fold, placed.schema)
-        manifest = {"fold": fold, "kept": kept.count()}
-        ids = kept.select("doc_id")
+        manifest = {"fold": fold, "kept": write_store(placed, args.out, fold)}
+        ids = _read_fold_kept(spark, args.out, fold, placed.schema).select(
+            "doc_id"
+        )
         survivors = new.join(ids, "doc_id")
         build_signature_index(survivors, args.sig, batch_id=fold)
         build_exact_key_index(survivors, args.key, batch_id=fold)
@@ -940,13 +895,13 @@ def main(argv: list[str] | None = None) -> int:
                 drift_report,
             )
 
-            grown = spark.read.parquet(args.corpus)
-            pre = grown.filter(F.col("batch_id") != fold)
             manifest["corpus_drift_tv"] = {
                 r["feature"]: r["tv"]
                 for r in drift_report(
-                    pre.select("lang", "n_chars"),
-                    grown.select("lang", "n_chars"),
+                    read_store(spark, args.corpus, fold).select(
+                        "lang", "n_chars"
+                    ),
+                    read_store(spark, args.corpus).select("lang", "n_chars"),
                 ).collect()
             }
         if langid_probe is not None:
@@ -1024,15 +979,14 @@ def main(argv: list[str] | None = None) -> int:
                 else None
             ),
         )
-        out.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
+        n = write_store(out, args.out)
         print(json.dumps({"status": "ok", "cmd": "full", "kept": n,
                           "out": args.out}))
     elif args.cmd == "init-corpus":
         _refuse_flat_root(args.corpus, "corpus")
-        docs = spark.read.parquet(args.docs)
-        append_corpus_batch(docs, args.corpus, args.batch_id)
-        n = docs.count()
+        n = append_corpus_batch(
+            spark.read.parquet(args.docs), args.corpus, args.batch_id
+        )
         print(json.dumps({"status": "ok", "cmd": "init-corpus", "docs": n,
                           "corpus": args.corpus,
                           "batch_id": args.batch_id}))
@@ -1062,15 +1016,13 @@ def main(argv: list[str] | None = None) -> int:
             drift_report,
         )
 
-        old = spark.read.parquet(args.old)
+        old = read_store(spark, args.old, args.exclude_batch_id)
+        if args.exclude_batch_id is not None and "batch_id" not in old.columns:
+            raise ValueError(
+                "drift --exclude-batch-id: --old is not a batch_id-"
+                "partitioned fold store"
+            )
         new = spark.read.parquet(args.new)
-        if args.exclude_batch_id is not None:
-            if "batch_id" not in old.columns:
-                raise ValueError(
-                    "drift --exclude-batch-id: --old is not a batch_id-"
-                    "partitioned fold store"
-                )
-            old = old.filter(F.col("batch_id") != args.exclude_batch_id)
         rows = drift_report(
             old.select("lang", "n_chars"), new.select("lang", "n_chars")
         ).collect()
@@ -1364,8 +1316,7 @@ def main(argv: list[str] | None = None) -> int:
             _refuse_fold_roots(args)
         new, out, langid_probe = _curate(spark.read.parquet(args.new), fold)
         if fold is None:
-            out.write.mode("overwrite").parquet(args.out)
-            manifest = {"kept": spark.read.parquet(args.out).count()}
+            manifest = {"kept": write_store(out, args.out)}
             drift = _quality_drift_probe(
                 new, frozen_quality, bench_docs, args.decon_bloom_min_grams,
                 bench_n_grams, args.decon_n, "this batch",

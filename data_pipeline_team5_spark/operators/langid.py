@@ -49,6 +49,8 @@ state is |langs| × (buckets + 1) doubles.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,6 +60,7 @@ from data_pipeline_team5_spark.operators.quality import (
     lang_literal_sql,
     literal_array_sql,
 )
+from data_pipeline_team5_spark.operators.ranks import _pin
 from data_pipeline_team5_spark.operators.textops import hashed_bucket_sql
 
 LANGID_BUCKETS = 256  # hashed char-gram dim — smaller than the quality
@@ -147,6 +150,44 @@ def char_ngrams_sql(col: str, ns: tuple[int, ...] = LANGID_NS) -> str:
     return "concat(" + ", ".join(parts) + ")"
 
 
+def _langid_features(
+    reference: DataFrame,
+    id_col: str,
+    text_col: str,
+    lang_col: str,
+    buckets: int,
+    cap: int,
+) -> tuple[DataFrame, Callable[[], None]]:
+    """:func:`langid_train_features` plus the release handle of its
+    pin."""
+    capped = capped_ids_by_lang(reference, id_col, lang_col, cap).select(
+        id_col
+    )
+    base, release = _pin(
+        reference.join(F.broadcast(capped), id_col)
+        .select(
+            F.col(id_col),
+            F.col(lang_col),
+            F.expr(langid_norm_sql(f"`{text_col}`")).alias("_s"),
+        )
+        .select(
+            id_col, lang_col, F.expr(char_ngrams_sql("_s")).alias("_g")
+        )
+    )
+    features = (
+        base.select(
+            lang_col, id_col, F.explode(F.col("_g")).alias("g")
+        )
+        .groupBy(
+            lang_col,
+            id_col,
+            F.expr(hashed_bucket_sql("g", buckets)).alias("b"),
+        )
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return features, release
+
+
 def langid_train_features(
     reference: DataFrame,
     id_col: str = "doc_id",
@@ -161,38 +202,16 @@ def langid_train_features(
     set BROADCAST (the classifier_train_features discipline).
 
     The gram arrays are CHECKPOINT-PINNED before the explode — the
-    measured 110×-class pathology (round 16: 240 s → 3 s at sf0.1):
-    without the barrier, projection collapse re-inlines the
-    norm-regex + char-gram construction INTO the generator's output
-    projection, so every exploded gram re-runs the whole O(len)
-    chain — O(grams²) per document. The pin holds only the capped
-    sample's gram arrays (≤ |langs| × cap rows), never the corpus."""
-    capped = capped_ids_by_lang(reference, id_col, lang_col, cap).select(
-        id_col
-    )
-    base = (
-        reference.join(F.broadcast(capped), id_col)
-        .select(
-            F.col(id_col),
-            F.col(lang_col),
-            F.expr(langid_norm_sql(f"`{text_col}`")).alias("_s"),
-        )
-        .select(
-            id_col, lang_col, F.expr(char_ngrams_sql("_s")).alias("_g")
-        )
-        .localCheckpoint()
-    )
-    return (
-        base.select(
-            lang_col, id_col, F.explode(F.col("_g")).alias("g")
-        )
-        .groupBy(
-            lang_col,
-            id_col,
-            F.expr(hashed_bucket_sql("g", buckets)).alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    measured 110×-class pathology (240 s → 3 s at sf0.1): without the
+    barrier, projection collapse re-inlines the norm-regex + char-gram
+    construction INTO the generator's output projection, so every
+    exploded gram re-runs the whole O(len) chain — O(grams²) per
+    document. The pin holds only the capped sample's gram arrays
+    (≤ |langs| × cap rows), never the corpus; :func:`fit_langid`
+    releases it once the features are collected."""
+    return _langid_features(
+        reference, id_col, text_col, lang_col, buckets, cap
+    )[0]
 
 
 def fit_langid(
@@ -215,9 +234,13 @@ def fit_langid(
     A reference with a single language yields that one always-positive
     model (degenerate but well-defined); an empty reference yields {}.
     """
-    rows = langid_train_features(
+    features, release = _langid_features(
         reference, id_col, text_col, lang_col, buckets, cap
-    ).collect()
+    )
+    try:
+        rows = features.collect()
+    finally:
+        release()
     per_doc: dict = {}
     doc_lang: dict = {}
     for r in rows:

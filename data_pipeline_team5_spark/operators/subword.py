@@ -45,9 +45,12 @@ BASELINE.json.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_team5_spark.operators.ranks import _pin
 from data_pipeline_team5_spark.operators.textops import bpe_tokens_expr
 
 BPE_MERGES = 128  # bounded vocab: merge-table length == replace-chain
@@ -89,6 +92,25 @@ def capped_ids(
     )
 
 
+def _bpe_word_counts(
+    docs: DataFrame, id_col: str, text_col: str, cap: int
+) -> tuple[DataFrame, Callable[[], None]]:
+    """:func:`bpe_train_word_counts` plus the release handle of its
+    pin."""
+    keep = capped_ids(docs, id_col, cap)
+    base, release = _pin(
+        docs.join(F.broadcast(keep), id_col).select(
+            bpe_tokens_expr(text_col).alias("_ws")
+        )
+    )
+    counts = (
+        base.select(F.explode("_ws").alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return counts, release
+
+
 def bpe_train_word_counts(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -100,18 +122,9 @@ def bpe_train_word_counts(
     before the explode (the measured explode-re-inline pathology:
     projection collapse would re-run the full-text regex extraction
     PER EXPLODED WORD — O(words²) regex scans per doc); the pin holds
-    only the capped sample's arrays (<= cap rows), never the corpus."""
-    keep = capped_ids(docs, id_col, cap)
-    base = (
-        docs.join(F.broadcast(keep), id_col)
-        .select(bpe_tokens_expr(text_col).alias("_ws"))
-        .localCheckpoint()
-    )
-    return (
-        base.select(F.explode("_ws").alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    only the capped sample's arrays (<= cap rows), never the corpus.
+    :func:`fit_bpe` releases it once the counts are collected."""
+    return _bpe_word_counts(docs, id_col, text_col, cap)[0]
 
 
 def _mark_word(w: str) -> str:
@@ -134,7 +147,11 @@ def fit_bpe(
     ``str.replace`` rule the Spark apply chain executes, so fit-time
     segmentation and apply-time segmentation can never drift. Stops
     early when no pair occurs twice (nothing left worth a merge)."""
-    rows = bpe_train_word_counts(docs, id_col, text_col, cap).collect()
+    counts, release = _bpe_word_counts(docs, id_col, text_col, cap)
+    try:
+        rows = counts.collect()
+    finally:
+        release()
     vocab: dict[tuple[str, ...], int] = {}
     for r in rows:
         syms = tuple(list(_mark_word(r["word"])) + [BPE_EOW])

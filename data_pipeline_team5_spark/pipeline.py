@@ -485,6 +485,157 @@ def _pool_hashes(
     ).localCheckpoint()
 
 
+def _exact_dedup(
+    kept: DataFrame,
+    corpus_docs: DataFrame | None = None,
+    key_index_path: str | None = None,
+    exclude_batch_id: str | None = None,
+) -> tuple[DataFrame, int]:
+    """Exact dedup, both presets: one survivor (the smallest doc_id) per
+    ``exact_key``; with ``corpus_docs``, also drop keys the retained
+    corpus already holds — probed from the stored key index at
+    ``key_index_path`` (an O(batch) probe, minus the replayed batch)
+    when given, else recomputed from the corpus text.
+
+    The result is pinned once: the near-dup stage's four consumers (the
+    stop-shingle count, pair generation, component vertices, the
+    survivor join) would otherwise each re-run the regex-heavy filter
+    stage. Its row count is observed on the pin's own job rather than
+    counted by a job of its own. Returns (pinned frame, row count)."""
+    from pyspark.sql import Observation
+
+    from data_pipeline_team5_spark.operators.dedup import dedup_exact
+
+    uniq = dedup_exact(
+        kept.withColumn("_key", exact_key("text")), ["_key"], "doc_id"
+    )
+    if corpus_docs is not None:
+        if key_index_path is not None:
+            keys = read_store(
+                kept.sparkSession, key_index_path, exclude_batch_id
+            ).select("_key")
+        else:
+            keys = corpus_docs.select(
+                exact_key("text").alias("_key")
+            ).distinct()
+        uniq = uniq.join(keys, "_key", "left_anti")
+    obs = Observation()
+    uniq = (
+        uniq.drop("_key")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    return uniq, int(obs.get["n"])
+
+
+def _payload_pairs(
+    pairs: DataFrame,
+    uniq: DataFrame,
+    blobs: dict[str, DataFrame | None],
+    decoded: dict[str, DataFrame],
+    backends: dict[str, str],
+    indexes: dict[str, DataFrame] | None = None,
+) -> DataFrame:
+    """``pairs`` (doc_a, doc_b) plus every modality's payload near-dup
+    pairs over ``uniq``'s payloads, so payload duplicates fall into the
+    same component graph as text near-dups. The full run pairs the pool
+    with itself (the capped banded join — correct here, where clusters,
+    not pair lists, are consumed); the daily batch passes ``indexes``
+    (modality → its stored hash-index frame) and probes them instead, so
+    the retained corpus's payloads are never decoded again. A modality
+    without blobs, or without an index in the daily form, adds none."""
+    from data_pipeline_team5_spark.operators.multimodal import (
+        perceptual_pairs,
+        perceptual_pairs_against_index,
+    )
+
+    for m in MODALITIES.values():
+        if blobs[m.name] is None or (
+            indexes is not None and m.name not in indexes
+        ):
+            continue
+        hashes = _pool_hashes(m, blobs, decoded, uniq, backends)
+        if indexes is None:
+            mpairs = perceptual_pairs(
+                hashes, max_hamming=m.max_hamming, max_bucket=m.max_bucket
+            )
+        else:
+            mpairs = perceptual_pairs_against_index(
+                hashes,
+                indexes[m.name],
+                max_hamming=m.max_hamming,
+                max_bucket=m.max_bucket,
+            )
+        pairs = pairs.select("doc_a", "doc_b").unionByName(
+            mpairs.select("doc_a", "doc_b")
+        )
+    return pairs
+
+
+def _first_per_component(
+    scored: DataFrame, comp: DataFrame, *order
+) -> DataFrame:
+    """The doc_ids of the first row per near-dup component of ``scored``
+    (doc_id plus score columns) under ``order`` — the shared body of the
+    ``quality`` and ``source_rank`` survivor policies: a component-grain
+    window over (id, component, score) rows, never text."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("component").orderBy(*order)
+    return (
+        scored.join(comp, comp.id == F.col("doc_id"))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("doc_id")
+    )
+
+
+def _sized(
+    survivors: DataFrame, bpe_merges: list[tuple[str, str]] | None
+) -> DataFrame:
+    """Token count and split, both presets: ``(doc_id, lang, n_tok,
+    split)``. The count is the BPE-ish pretoken count, NOT whitespace: zh
+    is in the language allowlist and is not whitespace-segmented, so
+    whitespace counts would understate zh budgets ~100x and overstuff zh
+    bins. With ``bpe_merges`` (a fitted merge table,
+    operators/subword.py:fit_bpe) it is the LEARNED subword count, which
+    the pretoken count floors; the daily loop passes the full run's
+    frozen table, never a per-batch refit. Splits are hash-stable, so
+    eval sets never move as the corpus grows."""
+    from data_pipeline_team5_spark.operators.sampling import split_assign
+
+    if bpe_merges is not None:
+        from data_pipeline_team5_spark.operators.subword import (
+            learned_token_count,
+        )
+
+        n_tok = learned_token_count(F.col("text"), bpe_merges)
+    else:
+        from data_pipeline_team5_spark.operators.textops import (
+            bpe_token_count,
+        )
+
+        n_tok = bpe_token_count(F.col("text"))
+    return split_assign(
+        survivors.select("doc_id", "lang", n_tok.alias("n_tok")), "doc_id"
+    )
+
+
+def _pack(sized: DataFrame, token_budget: int) -> DataFrame:
+    """Pack, both presets: two-level prefix-sum packing into
+    ``token_budget`` bins per (split, lang); the preset's output rows."""
+    from data_pipeline_team5_spark.operators.sampling import pack_bins
+
+    packed = pack_bins(
+        sized,
+        order_key="doc_id",
+        size_col="n_tok",
+        budget=token_budget,
+        partition_cols=("split", "lang"),
+    )
+    return packed.select("doc_id", "lang", "split", "bin_id", "n_tok")
+
+
 def curate_training_data(
     docs: DataFrame,
     token_budget: int = 2048,
@@ -545,15 +696,15 @@ def curate_training_data(
        connected components → one representative per group:
        ``survivor_policy="min_id"`` (default — cheapest: the component
        label IS the survivor id, zero extra work) or ``"quality"``
-       (round 9 — keep the component's highest text-profile quality
-       member, ties to the smaller id: the keep-the-cleanest retention
-       real pipelines want, at the cost of one quality projection and
-       one component-grain row_number window; the catalog's
+       (keep the component's highest text-profile quality member, ties
+       to the smaller id: the keep-the-cleanest retention real pipelines
+       want, at the cost of one quality projection and one
+       component-grain row_number window; the catalog's
        dedup_quality_survivor is its oracle-checked twin) or
-       ``"source_rank"`` (round 9 — keep the doc from the
-       highest-priority source per ``source_priority`` order, unlisted
-       sources rank equal-worst, ties to the smaller id: the provenance
-       rule for curated-source-vs-crawl collisions);
+       ``"source_rank"`` (keep the doc from the highest-priority source
+       per ``source_priority`` order, unlisted sources rank equal-worst,
+       ties to the smaller id: the provenance rule for
+       curated-source-vs-crawl collisions);
        then optionally ``target_mix``: waterline domain-mixture
        reweighting over the DEDUPED survivors
        (operators/sampling.py:mixture_filter) — after dedup so
@@ -603,18 +754,12 @@ def curate_training_data(
     from data_pipeline_team5_spark.operators.components import (
         connected_components,
     )
-    from data_pipeline_team5_spark.operators.dedup import dedup_exact
-    from data_pipeline_team5_spark.operators.sampling import (
-        pack_bins,
-        split_assign,
-    )
-    from data_pipeline_team5_spark.operators.textops import bpe_token_count
 
-    # 0-langid. optional MODEL-BASED language-ID fill (round 16,
-    # VERDICT r15 #1 — the CCNet first stage): a raw corpus's lang
-    # column is partial or absent, and stage 1's language allowlist —
-    # plus everything per-language after it (per-lang quality models,
-    # per-lang packing) — would silently DROP NULL-lang docs. Fit the
+    # 0-langid. optional MODEL-BASED language-ID fill (the CCNet first
+    # stage): a raw corpus's lang column is partial or absent, and
+    # stage 1's language allowlist — plus everything per-language after
+    # it (per-lang quality models, per-lang packing) — would silently
+    # DROP NULL-lang docs. Fit the
     # hashed char-n-gram one-vs-rest models on the labeled slice
     # (capped per lang, driver-side GD), predict ONLY over the
     # NULL-lang slice (one filtered scan), never overwrite a declared
@@ -633,10 +778,10 @@ def curate_training_data(
             # frozen-model hand-off (the quality_model_out precedent):
             # the daily loop fills under the SAME models the full run
             # filled with (`incremental/stream --langid-model`) — and
-            # (round 17, VERDICT r16 #2) carries the run's fill-time
-            # predicted-lang mixture so each fold can measure drift
-            # against it (the quality snapshot's langid twin; one small
-            # groupBy over the filled frame, full-run-only cost)
+            # carries the run's fill-time predicted-lang mixture so each
+            # fold can measure drift against it (the quality snapshot's
+            # langid twin; one small groupBy over the filled frame,
+            # full-run-only cost)
             from data_pipeline_team5_spark.operators.langid import (
                 langid_fill_mixture,
                 langid_provenance,
@@ -677,10 +822,10 @@ def curate_training_data(
         batch=False,
     )
 
-    # 1b. optional MODEL-BASED quality filters (round 14, operators/
-    # quality.py — the CCNet two-signal stack), applied to the filtered
-    # pool BEFORE dedup, classifier first then LM (so LM tertiles are
-    # computed over classifier-clean docs, the published order):
+    # 1b. optional MODEL-BASED quality filters (operators/quality.py —
+    # the CCNet two-signal stack), applied to the filtered pool BEFORE
+    # dedup, classifier first then LM (so LM tertiles are computed over
+    # classifier-clean docs, the published order):
     #
     # - classifier (``quality_classifier_reference``): logistic weights
     #   fit driver-side on the reference (positives) vs its token-
@@ -708,10 +853,10 @@ def curate_training_data(
     qm_hist: dict = {}
 
     def _snapshot_hist(scored, col: str, sig: str) -> None:
-        # full-run score histogram (round 15, VERDICT r14 #4): stored
-        # edges from the run's own min/max so every daily batch bins
-        # over IDENTICAL cells (operators/quality.py:score_histogram);
-        # one 1-row agg + one groupBy over the already-pinned table
+        # full-run score histogram: stored edges from the run's own
+        # min/max so every daily batch bins over IDENTICAL cells
+        # (operators/quality.py:score_histogram); one 1-row agg + one
+        # groupBy over the already-pinned table
         if quality_model_out is None:
             return
         from data_pipeline_team5_spark.operators.quality import (
@@ -732,41 +877,34 @@ def curate_training_data(
             "counts": score_histogram(scored, col, lo, hi),
         }
 
-    if quality_classifier_reference is not None and (
-        quality_classifier_per_lang
-    ):
+    if quality_classifier_reference is not None:
         from data_pipeline_team5_spark.operators.quality import (
+            classifier_score_frame,
             classifier_score_frame_by_lang,
+            fit_quality_classifier,
             fit_quality_classifier_by_lang,
         )
 
-        models = fit_quality_classifier_by_lang(
-            quality_classifier_reference
-        )
-        qm_weights_by_lang = {lang: wb[0] for lang, wb in models.items()}
-        qm_bias_by_lang = {lang: wb[1] for lang, wb in models.items()}
-        cls_scored = classifier_score_frame_by_lang(
-            kept, models
-        ).localCheckpoint()
+        if quality_classifier_per_lang:
+            models = fit_quality_classifier_by_lang(
+                quality_classifier_reference
+            )
+            qm_weights_by_lang = {lang: wb[0] for lang, wb in models.items()}
+            qm_bias_by_lang = {lang: wb[1] for lang, wb in models.items()}
+            cls_scored = classifier_score_frame_by_lang(kept, models)
+            sig = "classifier_logit_by_lang"
+        else:
+            qm_weights, qm_bias = fit_quality_classifier(
+                quality_classifier_reference
+            )
+            cls_scored = classifier_score_frame(kept, qm_weights, qm_bias)
+            sig = "classifier_logit"
+        cls_scored = cls_scored.localCheckpoint()
         keep_ids = cls_scored.filter(
             F.col("logit").isNull() | (F.col("logit") > 0)
         ).select("doc_id")
         kept = kept.join(keep_ids, "doc_id")
-        _snapshot_hist(cls_scored, "logit", "classifier_logit_by_lang")
-    elif quality_classifier_reference is not None:
-        from data_pipeline_team5_spark.operators.quality import (
-            classifier_score_frame,
-            fit_quality_classifier,
-        )
-
-        w, b = fit_quality_classifier(quality_classifier_reference)
-        qm_weights, qm_bias = w, b
-        cls_scored = classifier_score_frame(kept, w, b).localCheckpoint()
-        keep_ids = cls_scored.filter(
-            F.col("logit").isNull() | (F.col("logit") > 0)
-        ).select("doc_id")
-        kept = kept.join(keep_ids, "doc_id")
-        _snapshot_hist(cls_scored, "logit", "classifier_logit")
+        _snapshot_hist(cls_scored, "logit", sig)
     if lm_reference_docs is not None:
         from data_pipeline_team5_spark.operators.quality import (
             fit_hashed_bigram_lm,
@@ -820,7 +958,7 @@ def curate_training_data(
             bias=qm_bias,
             weights_by_lang=qm_weights_by_lang,
             bias_by_lang=qm_bias_by_lang,
-            # fit fingerprint (round 15, VERDICT r14 #4) — taken over
+            # fit fingerprint — taken over
             # whichever reference the run actually fit on
             provenance=model_provenance(
                 quality_classifier_reference
@@ -830,92 +968,53 @@ def curate_training_data(
             score_hist=qm_hist or None,
         )
 
-    # 2. exact dedup (deterministic survivor: min doc_id per content key)
-    uniq = dedup_exact(
-        kept.withColumn("_key", exact_key("text")), ["_key"], "doc_id"
-    ).drop("_key")
-    # Materialize the filtered+deduped corpus once: four downstream
-    # consumers (the stop-shingle count, pair generation, component
-    # vertices, the survivor join) would otherwise each re-run the
-    # regex-heavy quality filter — 4 corpus passes instead of 1. A real
-    # run materializes this layer anyway (it IS the curated corpus).
-    # The stop-shingle guard's corpus count rides the SAME pin job via
-    # observe (round 18, guide §1.2 — the components.py fingerprint
-    # recipe): previously a separate count job over the pin.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    uniq = uniq.observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint()
+    # 2. exact dedup (deterministic survivor: min doc_id per content
+    # key); the pinned layer IS the curated corpus a real run
+    # materializes anyway, and its observed count sizes the stop-shingle
+    # guard when no ``n_docs`` is passed
+    uniq, n_uniq = _exact_dedup(kept)
     if n_docs is None:
-        n_docs = int(obs.get["n"])
+        n_docs = n_uniq
 
     # 3. near-dup groups → one representative per component.
     # "jaccard" (inverted index + doc-freq guard) gives exact pairs and is
     # the default; "lsh" (banded MinHash + bucket cap + exact verify) is
     # the cheaper path once the shingle-pair stream outgrows the index
-    # approach — both guarded presets, same downstream semantics.
-    pairs = neardup_production_pairs(
-        uniq,
-        threshold=neardup_threshold,
-        method=neardup_method,
-        n_docs=n_docs,
+    # approach — both guarded presets, same downstream semantics. Payload
+    # near-dup pairs join the same component graph.
+    pairs = _payload_pairs(
+        neardup_production_pairs(
+            uniq,
+            threshold=neardup_threshold,
+            method=neardup_method,
+            n_docs=n_docs,
+        ),
+        uniq, blobs, decoded, backends,
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # 3b. optional payload near-dup pairs join the same component graph
-    from data_pipeline_team5_spark.operators.multimodal import (
-        perceptual_pairs,
-    )
-
-    for m in MODALITIES.values():
-        if blobs[m.name] is None:
-            continue
-        mpairs = perceptual_pairs(
-            _pool_hashes(m, blobs, decoded, uniq, backends),
-            max_hamming=m.max_hamming,
-            max_bucket=m.max_bucket,
-        )
-        pairs = pairs.unionByName(mpairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ))
     comp = connected_components(
         uniq.select("doc_id"), pairs, id_col="doc_id",
         scratch_dir=scratch_dir,
     )
     if survivor_policy == "min_id":
-        survivors = uniq.join(
-            comp.filter(F.col("id") == F.col("component")).select(
-                F.col("id").alias("doc_id")
-            ),
-            "doc_id",
+        keep_ids = comp.filter(F.col("id") == F.col("component")).select(
+            F.col("id").alias("doc_id")
         )
     elif survivor_policy == "quality":
         # keep-the-cleanest: argmax quality per component (ties to the
         # smaller id) — one map-side quality projection over the already
-        # materialized curated layer + a component-grain window carrying
-        # (id, component, double) rows, never text. Bitwise-deterministic
-        # for the same reason dedup_quality_survivor's oracle matches:
-        # the quality arithmetic is the text-profile constant sequence.
-        from pyspark.sql import Window as _W
-
+        # materialized curated layer. Bitwise-deterministic for the same
+        # reason dedup_quality_survivor's oracle matches: the quality
+        # arithmetic is the text-profile constant sequence.
         from data_pipeline_team5_spark.operators.textops import (
             quality_exprs,
             tokens_expr,
         )
 
         q = quality_exprs(tokens_expr("text"))["quality"]
-        scored = uniq.select("doc_id", q.alias("_q")).join(
-            comp, comp.id == F.col("doc_id")
+        keep_ids = _first_per_component(
+            uniq.select("doc_id", q.alias("_q")), comp,
+            F.desc("_q"), F.asc("doc_id"),
         )
-        w = _W.partitionBy("component").orderBy(
-            F.desc("_q"), F.asc("doc_id")
-        )
-        keep_ids = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id")
-        )
-        survivors = uniq.join(keep_ids, "doc_id")
     elif survivor_policy == "source_rank":
         # keep-the-most-trusted: the doc from the highest-priority SOURCE
         # wins its component (ties: smaller id). The real-world collision
@@ -924,43 +1023,31 @@ def curate_training_data(
         # come from `source_priority` (first = best); sources absent from
         # the list rank after every listed one (equal worst rank), so an
         # unlisted source never beats a listed one. Cost: one broadcast
-        # ~|sources|-row rank map + the same component-grain window the
-        # quality policy pays — (id, component, int) rows, never text.
-        from pyspark.sql import Window as _W
-
+        # ~|sources|-row rank map + the quality policy's window.
         ranks = {s_: i for i, s_ in enumerate(source_priority or [])}
-        worst = len(ranks)
         rank_col = F.coalesce(
             F.create_map(
                 *[F.lit(x) for kv in sorted(ranks.items()) for x in kv]
             )[F.col("source")].cast("int"),
-            F.lit(worst),
+            F.lit(len(ranks)),
         ) if ranks else F.lit(0)
         # the shared filter stage projects source away (the other
         # policies never need it); rejoin it at id grain from the raw
         # input — (id, source) rows only, never text
-        src_map = docs.select("doc_id", "source")
-        scored = (
+        keep_ids = _first_per_component(
             uniq.select("doc_id")
-            .join(src_map, "doc_id")
-            .select("doc_id", rank_col.alias("_r"))
-            .join(comp, comp.id == F.col("doc_id"))
+            .join(docs.select("doc_id", "source"), "doc_id")
+            .select("doc_id", rank_col.alias("_r")),
+            comp,
+            F.asc("_r"), F.asc("doc_id"),
         )
-        w = _W.partitionBy("component").orderBy(
-            F.asc("_r"), F.asc("doc_id")
-        )
-        keep_ids = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id")
-        )
-        survivors = uniq.join(keep_ids, "doc_id")
     else:
         raise ValueError(
             f"curate_training_data: unknown survivor_policy "
             f"{survivor_policy!r} (use 'min_id', 'quality' or "
             f"'source_rank')"
         )
+    survivors = uniq.join(keep_ids, "doc_id")
 
     # 3.5 optional domain-mixture reweighting over the DEDUPED survivors
     # (rates computed after dedup, or duplicate-heavy languages would be
@@ -974,34 +1061,7 @@ def curate_training_data(
         survivors = mixture_filter(survivors, target_mix)
 
     # 4.-5. split + pack
-    # BPE-ish pretoken count, NOT whitespace (VERDICT r5 #2): zh is in the
-    # language allowlist and is not whitespace-segmented — whitespace counts
-    # understate zh budgets ~100x and pack_bins would overstuff zh bins.
-    # Round 17 (VERDICT r16 #3): with ``bpe_merges`` (a fitted merge
-    # table, operators/subword.py:fit_bpe) budgets use the LEARNED
-    # subword count instead — the pretoken counter floors it, so
-    # heuristic budgets systematically understuffed real-tokenizer bins.
-    if bpe_merges is not None:
-        from data_pipeline_team5_spark.operators.subword import (
-            learned_token_count,
-        )
-
-        n_tok = learned_token_count(
-            F.col("text"), bpe_merges
-        ).alias("n_tok")
-    else:
-        n_tok = bpe_token_count(F.col("text")).alias("n_tok")
-    sized = split_assign(
-        survivors.select("doc_id", "lang", n_tok), "doc_id"
-    )
-    packed = pack_bins(
-        sized,
-        order_key="doc_id",
-        size_col="n_tok",
-        budget=token_budget,
-        partition_cols=("split", "lang"),
-    )
-    return packed.select("doc_id", "lang", "split", "bin_id", "n_tok")
+    return _pack(_sized(survivors, bpe_merges), token_budget)
 
 
 def curate_incremental_batch(
@@ -1042,7 +1102,7 @@ def curate_incremental_batch(
     hash-stable splits guarantee a doc's split never depends on when it
     arrived).
 
-    **Deployed form** (VERDICT r5 #2): pass ``index_sig_path`` (built by
+    **Deployed form**: pass ``index_sig_path`` (built by
     :func:`build_signature_index`) and ``key_index_path`` (built by
     :func:`build_exact_key_index`) and the daily cost is O(batch +
     candidates), independent of corpus size — the exact-dedup anti-join
@@ -1106,13 +1166,7 @@ def curate_incremental_batch(
     )
     from data_pipeline_team5_spark.operators.dedup import (
         PRODUCTION_MAX_BUCKET,
-        dedup_exact,
     )
-    from data_pipeline_team5_spark.operators.sampling import (
-        pack_bins,
-        split_assign,
-    )
-    from data_pipeline_team5_spark.operators.textops import bpe_token_count
 
     # 1. filter the new batch (corpus is already curated — untouched);
     # same shared stage as the full run, batch-sized work only
@@ -1126,13 +1180,13 @@ def curate_incremental_batch(
         decon_n=decon_n,
     )
     if quality_model is not None:
-        # FROZEN-model quality rules (round 14): the daily loop applies
-        # the full run's saved thresholds — classifier logit > 0, LM
-        # bits ≤ the full run's realized tertile cutoff — never a
-        # per-batch refit or a batch-local tertile (wrong pool). Score
-        # pins are batch-sized, reclaimed with the batch like the dedup
-        # pin below; see operators/quality.py:apply_frozen_quality_model
-        # for why the pins are required (the measured filter-on-score
+        # FROZEN-model quality rules: the daily loop applies the full
+        # run's saved thresholds — classifier logit > 0, LM bits ≤ the
+        # full run's realized tertile cutoff — never a per-batch refit
+        # or a batch-local tertile (wrong pool). Score pins are
+        # batch-sized, reclaimed with the batch like the dedup pin
+        # below; see operators/quality.py:apply_frozen_quality_model for
+        # why the pins are required (the measured filter-on-score
         # pathology).
         from data_pipeline_team5_spark.operators.quality import (
             apply_frozen_quality_model,
@@ -1150,29 +1204,39 @@ def curate_incremental_batch(
     kept, decoded = _modality_decon(
         kept, blobs, bench_blobs, backends, batch=True
     )
+    # each modality with blobs probes its stored hash index; without one
+    # it is decon-only, which needs a benchmark
+    spark = new_docs.sparkSession
+    index_paths = {"image": perceptual_index_path,
+                   "audio": audio_index_path, "video": video_index_path}
+    indexes: dict[str, DataFrame] = {}
+    for m in MODALITIES.values():
+        path = index_paths[m.name]
+        if blobs[m.name] is None or (
+            path is None and bench_blobs[m.name] is not None
+        ):
+            continue
+        if path is None:
+            raise ValueError(
+                f"curate_incremental_batch: new_{m.name}_blobs requires "
+                f"{m.index}_index_path (build_{m.index}_index) — the "
+                f"daily loop never re-decodes the retained corpus's "
+                f"{m.noun} — and/or benchmark_{m.name}_blobs (decon-only)"
+            )
+        indexes[m.name] = read_store(spark, path, exclude_batch_id).select(
+            "doc_id", "dhash", "ahash"
+        )
 
-    # 2. exact dedup: within the batch, then anti-join the corpus's keys —
+    # 2. exact dedup: within the batch, then against the corpus's keys —
     # probed from the stored key table when available (O(batch) probe)
     # instead of scanning + distinct-ing the whole corpus every run
-    uniq = dedup_exact(
-        kept.withColumn("_key", exact_key("text")), ["_key"], "doc_id"
+    uniq, _ = _exact_dedup(
+        kept, corpus_docs, key_index_path, exclude_batch_id
     )
-    if key_index_path is not None:
-        corpus_keys = new_docs.sparkSession.read.parquet(key_index_path)
-        if exclude_batch_id is not None and "batch_id" in corpus_keys.columns:
-            corpus_keys = corpus_keys.filter(
-                F.col("batch_id") != exclude_batch_id
-            )
-        corpus_keys = corpus_keys.select("_key")
-    else:
-        corpus_keys = corpus_docs.select(
-            exact_key("text").alias("_key")
-        ).distinct()
-    uniq = uniq.join(corpus_keys, "_key", "left_anti").drop("_key")
-    uniq = uniq.localCheckpoint()  # same 4-consumer argument as the full run
 
     # 3. near-dup vs corpus + within batch (incremental pairs only);
-    # stored-index form probes the materialized signatures
+    # stored-index form probes the materialized signatures, and payload
+    # near-dups probe each modality's stored hash index
     if index_sig_path is not None:
         raw_pairs = neardup_incremental_against_index(
             uniq,
@@ -1189,50 +1253,19 @@ def curate_incremental_batch(
             threshold=neardup_threshold,
             max_bucket=PRODUCTION_MAX_BUCKET,
         )
-    # payload near-dups probe each modality's stored hash index; the
-    # retained corpus's payloads are never decoded again
-    from data_pipeline_team5_spark.operators.multimodal import (
-        perceptual_pairs_against_index,
-    )
-
-    index_paths = {"image": perceptual_index_path,
-                   "audio": audio_index_path, "video": video_index_path}
-    for m in MODALITIES.values():
-        path = index_paths[m.name]
-        if blobs[m.name] is None:
-            continue
-        if path is None:
-            if bench_blobs[m.name] is not None:
-                continue  # decon-only
-            raise ValueError(
-                f"curate_incremental_batch: new_{m.name}_blobs requires "
-                f"{m.index}_index_path (build_{m.index}_index) — the "
-                f"daily loop never re-decodes the retained corpus's "
-                f"{m.noun} — and/or benchmark_{m.name}_blobs (decon-only)"
-            )
-        idx = new_docs.sparkSession.read.parquet(path)
-        if exclude_batch_id is not None and "batch_id" in idx.columns:
-            idx = idx.filter(F.col("batch_id") != exclude_batch_id)
-        mpairs = perceptual_pairs_against_index(
-            _pool_hashes(m, blobs, decoded, uniq, backends),
-            idx.select("doc_id", "dhash", "ahash"),
-            max_hamming=m.max_hamming,
-            max_bucket=m.max_bucket,
-        )
-        raw_pairs = raw_pairs.select("doc_a", "doc_b").unionByName(
-            mpairs.select("doc_a", "doc_b")
-        )
-    # localCheckpoint (round 17, guide §2.4): the verified pair list is
-    # consumed by corpus_in_pairs (twice — src and dst legs), the
-    # component step's edge materialization, AND — through vertices →
-    # comp → flagged → survivors → pack_bins' two window legs — by every
-    # re-evaluation of the final plan. Without a cut the whole
-    # candidate+verify subtree re-executes up to 8x inside the one
-    # output job (profiled at sf0.1; the r16 executed plan embedded four
-    # copies of the verify tree). Pairs are small by construction
-    # (capped buckets → accepted candidates only), so the pin is
-    # batch-sized, reclaimed with the batch.
-    pairs = raw_pairs.select(
+    # localCheckpoint: the verified pair list is consumed by
+    # corpus_in_pairs (twice — src and dst legs), the component step's
+    # edge materialization, AND — through vertices → comp → flagged →
+    # survivors → pack_bins' two window legs — by every re-evaluation of
+    # the final plan. Without a cut the whole candidate+verify subtree
+    # re-executes up to 8x inside the one output job (profiled at sf0.1;
+    # the uncut executed plan embedded four copies of the verify tree).
+    # Pairs are small by construction (capped buckets → accepted
+    # candidates only), so the pin is batch-sized, reclaimed with the
+    # batch.
+    pairs = _payload_pairs(
+        raw_pairs, uniq, blobs, decoded, backends, indexes
+    ).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).localCheckpoint()
     new_ids = uniq.select("doc_id")
@@ -1269,40 +1302,15 @@ def curate_incremental_batch(
         .join(uniq, "doc_id")
     )
 
-    # 4.-5. split + pack (batch-local bins)
-    # BPE-ish pretoken count, NOT whitespace (VERDICT r5 #2): zh is in the
-    # language allowlist and is not whitespace-segmented — whitespace counts
-    # understate zh budgets ~100x and pack_bins would overstuff zh bins.
-    # ``bpe_merges`` (round 17): the FULL run's fitted merge table — the
-    # frozen-model discipline: a daily batch sizes docs under the same
-    # vocabulary the full run packed with, never a per-batch refit.
-    if bpe_merges is not None:
-        from data_pipeline_team5_spark.operators.subword import (
-            learned_token_count,
-        )
-
-        n_tok = learned_token_count(
-            F.col("text"), bpe_merges
-        ).alias("n_tok")
-    else:
-        n_tok = bpe_token_count(F.col("text")).alias("n_tok")
-    # localCheckpoint (round 17, guide §2.4): pack_bins consumes its
-    # input twice (per-shard cumsum + shard totals) and joins the two —
-    # without a cut each leg re-runs the whole survivors tree (component
-    # labels join + comp_stats + the uniq join). The pinned layer is the
-    # batch's id-grain (doc_id, lang, n_tok, split) — narrow and
-    # batch-sized, reclaimed with the batch like the pair pin above.
-    sized = split_assign(
-        survivors.select("doc_id", "lang", n_tok), "doc_id"
-    ).localCheckpoint()
-    packed = pack_bins(
-        sized,
-        order_key="doc_id",
-        size_col="n_tok",
-        budget=token_budget,
-        partition_cols=("split", "lang"),
-    )
-    return packed.select("doc_id", "lang", "split", "bin_id", "n_tok")
+    # 4.-5. split + pack (batch-local bins). The sized layer is pinned:
+    # pack_bins consumes its input twice (per-shard cumsum + shard
+    # totals) and joins the two — without a cut each leg re-runs the
+    # whole survivors tree (component labels join + comp_stats + the
+    # uniq join). The pinned layer is the batch's id-grain (doc_id,
+    # lang, n_tok, split) — narrow and batch-sized, reclaimed with the
+    # batch like the pair pin above.
+    sized = _sized(survivors, bpe_merges).localCheckpoint()
+    return _pack(sized, token_budget)
 
 
 def bench_training_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1317,25 +1325,47 @@ def write_store(
     path: str,
     batch_id: str | None = None,
     mode: str = "overwrite",
-) -> None:
-    """Write ``df`` to a fold-store root. With ``batch_id`` (the daily
-    loop's form) the rows land as their own ``batch_id=<id>`` partition
-    with dynamic partition overwrite, so REPLAYING a batch replaces its
-    partition instead of appending duplicate rows — duplicate index rows
-    would double-count combined bucket membership in the probes'
-    ``max_bucket`` caps and silently drop true candidate pairs (ADVICE
-    r5 #2). Without it, a plain ``mode`` write, for callers with an
-    external exactly-once guarantee."""
+) -> int:
+    """Write ``df`` to a fold-store root and return the number of rows
+    written, observed on the write job itself (no re-read count). With
+    ``batch_id`` (the daily loop's form) the rows land as their own
+    ``batch_id=<id>`` partition with dynamic partition overwrite, so
+    REPLAYING a batch replaces its partition instead of appending
+    duplicate rows — duplicate index rows would double-count combined
+    bucket membership in the probes' ``max_bucket`` caps and silently
+    drop true candidate pairs. Without it, a plain ``mode`` write, for
+    callers with an external exactly-once guarantee."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
     if batch_id is None:
         df.write.mode(mode).parquet(path)
-        return
-    (
-        df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    else:
+        (
+            df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(path)
+        )
+    return int(obs.get["n"])
+
+
+def read_store(
+    spark: SparkSession, path: str, exclude_batch_id: str | None = None
+) -> DataFrame:
+    """Read a fold-store root, minus the batch ``exclude_batch_id`` when
+    the root is ``batch_id``-partitioned — the one replay rule of the
+    daily loop: a replayed batch must not see its own earlier output in
+    the corpus, the indexes or the assignments, or every survivor would
+    match itself and the replay would drop the whole batch. The filter
+    is on the partition column, so the excluded partition is pruned,
+    never scanned."""
+    df = spark.read.parquet(path)
+    if exclude_batch_id is not None and "batch_id" in df.columns:
+        df = df.filter(F.col("batch_id") != exclude_batch_id)
+    return df
 
 
 def build_signature_index(
@@ -1415,7 +1445,7 @@ def build_exact_key_index(
 
 def append_corpus_batch(
     docs: DataFrame, path: str, batch_id: str
-) -> None:
+) -> int:
     """Fold a batch's surviving DOCUMENT ROWS into the maintained retained-
     corpus root as an idempotent ``batch_id`` partition — the corpus-side
     twin of ``build_signature_index``'s daily upkeep.
@@ -1424,9 +1454,9 @@ def append_corpus_batch(
     exact-key index, and the corpus itself. Folding survivors into the
     indexes while the corpus stays static makes tomorrow's candidate pairs
     reference docs whose text the verify stage cannot see — near-dups of
-    folded survivors would be silently KEPT (ADVICE r6 #1; the loud
-    runtime guard is in ``neardup_incremental_against_index``)."""
-    write_store(docs, path, batch_id)
+    folded survivors would be silently KEPT (the loud runtime guard is in
+    ``neardup_incremental_against_index``). Returns the rows written."""
+    return write_store(docs, path, batch_id)
 
 
 def compact_fold_stores(
@@ -1596,11 +1626,9 @@ def next_bin_offset(
     older batch replayed after newer folds sees a moved-on store and may
     legitimately differ.)"""
     try:
-        df = spark.read.parquet(assignments_root)
+        df = read_store(spark, assignments_root, exclude_batch_id)
     except Exception:  # root absent on day 0 — Spark raises AnalysisException
         return 0
-    if exclude_batch_id is not None and "batch_id" in df.columns:
-        df = df.filter(F.col("batch_id") != exclude_batch_id)
     row = df.agg(F.max("bin_id").alias("m")).first()
     return 0 if row is None or row["m"] is None else int(row["m"]) + 1
 
@@ -1669,11 +1697,9 @@ def neardup_incremental_against_index(
         minhash_signatures,
     )
 
-    index_sig = new_docs.sparkSession.read.parquet(index_sig_path)
-    if exclude_batch_id is not None and "batch_id" in index_sig.columns:
-        # replay support: drop the replayed day's own partition
-        # (partition-pruned read — see curate_incremental_batch docstring)
-        index_sig = index_sig.filter(F.col("batch_id") != exclude_batch_id)
+    index_sig = read_store(
+        new_docs.sparkSession, index_sig_path, exclude_batch_id
+    )
     # Loud guard: a stored index built with a different num_perm would
     # either fail on a missing mh column or — worse, num_perm smaller than
     # stored — silently band over a signature PREFIX, generating candidates

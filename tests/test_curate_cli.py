@@ -67,6 +67,8 @@ def test_cli_daily_loop_end_to_end(spark, tmp_path, capsys):
                       "--corpus", s["corpus"]])
     assert r["status"] == "ok" and r["docs"] > 0
     assert os.path.isdir(os.path.join(s["corpus"], "batch_id=base"))
+    # the count is observed on the write job: it is the rows written
+    assert r["docs"] == spark.read.parquet(s["corpus"]).count()
 
     r = _run(capsys, ["build-index", "--docs", s["corpus"],
                       "--sig", s["sig"], "--key", s["key"]])
@@ -75,6 +77,12 @@ def test_cli_daily_loop_end_to_end(spark, tmp_path, capsys):
 
     r1 = _run(capsys, _inc_argv(s, paths["day1"], "day1"))
     assert r1["kept"] > 0 and r1["folded"] == "day1"
+    # the summary, the manifest row and the written partition agree
+    mf1 = json.load(open(os.path.join(s["out"], "_manifest", "day1.json")))
+    assert r1["kept"] == mf1["kept"] == (
+        spark.read.parquet(s["out"]).filter(F.col("batch_id") == "day1")
+        .count()
+    )
     # all three stores grew by a day1 partition
     for root in (s["corpus"], s["sig"], s["key"], s["out"]):
         assert os.path.isdir(os.path.join(root, "batch_id=day1")), root
@@ -632,6 +640,8 @@ def test_cli_full_survivor_policy_flag(spark, tmp_path, capsys):
     rb = _run(capsys, ["full", "--docs", paths["day0"], "--out", out_b,
                        "--survivor-policy", "quality"])
     assert ra["kept"] == rb["kept"] > 0
+    # `kept` is observed on the output write: the rows actually written
+    assert ra["kept"] == spark.read.parquet(out_a).count()
 
 
 def test_cli_incremental_report_drift(spark, tmp_path, capsys):
@@ -1495,12 +1505,14 @@ def test_cli_langid_drift_guard_tripped_and_quiet(spark, tmp_path, capsys):
     # QUIET fold: the identical document set → identical predictions →
     # TV exactly 0.0 (everything exact-dups away, but the probe runs on
     # the pre-filter batch — the mixture row exists even for kept=0)
-    _run(capsys, _inc_argv(s, p_full, "quietday") + [
+    quiet = _run(capsys, _inc_argv(s, p_full, "quietday") + [
         "--langid-model", mpath,
     ])
     mf_quiet = json.load(open(
         os.path.join(s["out"], "_manifest", "quietday.json")
     ))
+    # the all-dropped fold writes nothing and reports zero kept
+    assert quiet["kept"] == mf_quiet["kept"] == 0
     assert mf_quiet["langid_drift_tv"] == 0.0
     assert mf_quiet["langid_drift_hot"] is False
     assert mf_quiet["langid_mixture"]["predicted_lang_counts"] == (

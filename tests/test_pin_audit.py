@@ -61,16 +61,11 @@ EXPECTED_PINS = {
     # container-decode pass — the costliest of the three modalities,
     # every frame decodes — feeding both the banded join and the
     # component vertices; the mm_perceptual_dedup mechanism)
-    "bpe_learned_tokens": 1,  # round 17: the BPE fit's construction
-    # checkpoint — the capped sample's pretoken arrays (≤ cap rows)
-    # pinned so the word-count explode cannot re-inline the full-text
-    # regex extraction per exploded word (the langid fit's mechanism)
-    "langid_predict": 1,  # round 16: the FIT's construction-time
-    # checkpoint — ≤ |langs|×cap gram-array rows pinned so the
-    # training-feature explode cannot re-inline the norm+gram chain per
-    # exploded gram (the measured O(grams²)-per-doc pathology,
-    # operators/langid.py:langid_train_features); collected once at
-    # construction, never corpus-sized
+    "bpe_learned_tokens": 0,  # the BPE fit's construction checkpoint
+    # (the capped sample's pretoken arrays) is released by fit_bpe once
+    # the word counts are collected; nothing the query returns uses it
+    "langid_predict": 0,  # likewise: fit_langid releases its gram-array
+    # checkpoint right after the one training-feature collect
     "lm_perplexity_by_lang": 1,  # score-table pin
     "quality_classifier_by_lang": 1,  # score-table pin
     "sampling_panel": 1,  # round 17: the DSIR 256-row sufficient-
@@ -109,3 +104,27 @@ def test_pin_allowlist_is_exact():
     not leave a stale expectation behind."""
     missing = [n for n in EXPECTED_PINS if n not in QUERIES]
     assert not missing, missing
+
+
+def test_fits_release_their_construction_pins(spark):
+    """``fit_bpe`` and ``fit_langid`` each pin the capped sample before
+    their explode, collect once, and release the pin: a fit leaves no
+    new persistent RDD behind, however late ContextCleaner runs (the
+    ``contaminated_ids`` no-leak test's shape)."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_team5_spark.operators.langid import fit_langid
+    from data_pipeline_team5_spark.operators.subword import fit_bpe
+    from data_pipeline_team5_spark.plans.catalog import table
+
+    docs = table(spark, SF_SMALL, "documents")
+    jsc = spark.sparkContext._jsc
+    for name, fit in (
+        ("fit_bpe", lambda: fit_bpe(docs)),
+        ("fit_langid",
+         lambda: fit_langid(docs.filter(F.col("lang").isNotNull()))),
+    ):
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        assert fit(), name
+        leaked = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+        assert not leaked, (name, leaked)
