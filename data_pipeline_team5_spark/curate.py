@@ -78,8 +78,13 @@ from it: ``--<m>-blobs`` (a (doc_id, blob) parquet), ``--<m>-benchmark``
 (eval payloads to decontaminate against), the stored hash index
 (``--<index>-index``; build-index calls the image index
 ``--perceptual``) and, where the table lists decode choices,
-``--<m>-backend``. Blobs in `incremental`/`stream` need the index or a
-benchmark (decon-only), and a fold grows every index given.
+``--<m>-backend``. Right after parsing, the given flags become four
+dicts keyed by modality name — ``blob_paths``, ``bench_paths``,
+``backends`` and ``index_paths``; once the session is up the two path
+dicts are read into ``blobs`` and ``bench_blobs``. These go to the
+presets' dict arguments as they are and drive the fold's index growth. Blobs in `incremental`/`stream`
+need the index or a benchmark (decon-only), and a fold grows every index
+given.
 
 Each run writes parquet and prints ONE JSON summary line (rows kept,
 paths), cron-friendly like pipeline.main.
@@ -314,33 +319,23 @@ def _add_modality_flags(p: argparse.ArgumentParser, cmd: str) -> None:
                                 "(operators/multimodal.py)")
 
 
-def _modality_kwargs(
-    args: argparse.Namespace, blobs: dict, bench_blobs: dict, batch: bool
-) -> dict:
-    """The preset kwargs for every modality: ``<m>_blobs`` or, for the
-    incremental preset (``batch``), ``new_<m>_blobs`` plus the index
-    path; the benchmark blobs; the backend where there is a flag."""
-    kw: dict = {}
+def _by_modality(args: argparse.Namespace, flag) -> dict[str, str]:
+    """``{modality: value}`` of one per-modality flag (``flag(m)`` names
+    it) over the modalities where it was given, in table order."""
+    out = {}
     for m in MODALITIES.values():
-        if batch:
-            kw[f"new_{m.name}_blobs"] = blobs[m.name]
-            kw[f"{m.index}_index_path"] = _arg(args, _index_flag(m, args.cmd))
-        else:
-            kw[f"{m.name}_blobs"] = blobs[m.name]
-        kw[f"benchmark_{m.name}_blobs"] = bench_blobs[m.name]
-        if m.backends:
-            kw[f"{m.name}_backend"] = _arg(args, f"--{m.name}-backend")
-    return kw
+        value = _arg(args, flag(m))
+        if value:
+            out[m.name] = value
+    return out
 
 
-def _refuse_fold_roots(args: argparse.Namespace) -> None:
+def _refuse_fold_roots(args: argparse.Namespace, index_paths: dict) -> None:
     """Refuse every root a fold appends to, before any work is done."""
     roots = [(args.corpus, "corpus"), (args.sig, "sig"),
              (args.key, "key"), (args.out, "out")]
-    for m in MODALITIES.values():
-        flag = _index_flag(m, args.cmd)
-        if _arg(args, flag):
-            roots.append((_arg(args, flag), flag[2:]))
+    for name, path in index_paths.items():
+        roots.append((path, _index_flag(MODALITIES[name], args.cmd)[2:]))
     for path, what in roots:
         _refuse_flat_root(path, what)
 
@@ -669,6 +664,13 @@ def main(argv: list[str] | None = None) -> int:
 
     ap = _parser()
     args = ap.parse_args(argv)
+    # the per-modality flags as dicts keyed by modality; the blob paths
+    # become the presets' frames (``blobs``, ``bench_blobs``) once the
+    # session is up
+    blob_paths = _by_modality(args, lambda m: f"--{m.name}-blobs")
+    bench_paths = _by_modality(args, lambda m: f"--{m.name}-benchmark")
+    backends = _by_modality(args, lambda m: f"--{m.name}-backend")
+    index_paths = _by_modality(args, lambda m: _index_flag(m, args.cmd))
 
     if args.cmd == "manifest":
         # pure driver-side artifact read — no Spark session needed
@@ -720,16 +722,14 @@ def main(argv: list[str] | None = None) -> int:
     for m in MODALITIES.values():
         blobs_flag, bench_flag = f"--{m.name}-blobs", f"--{m.name}-benchmark"
         index_flag = _index_flag(m, args.cmd)
-        has_blobs = bool(_arg(args, blobs_flag))
-        if args.cmd == "build-index" and has_blobs != bool(
-            _arg(args, index_flag)
-        ):
+        has_blobs = m.name in blob_paths
+        if args.cmd == "build-index" and has_blobs != (m.name in index_paths):
             ap.error(f"build-index: {blobs_flag} and {index_flag} go together")
         if (
             args.cmd in ("incremental", "stream")
             and has_blobs
-            and not _arg(args, index_flag)
-            and not _arg(args, bench_flag)
+            and m.name not in index_paths
+            and m.name not in bench_paths
         ):
             verb = "are" if m.noun.endswith("s") else "is"
             ap.error(
@@ -737,7 +737,7 @@ def main(argv: list[str] | None = None) -> int:
                 f"retained corpus's {m.noun} {verb} reached only through "
                 f"the stored hash index) and/or {bench_flag} (decon-only)"
             )
-        if args.cmd == "full" and _arg(args, bench_flag) and not has_blobs:
+        if args.cmd == "full" and m.name in bench_paths and not has_blobs:
             ap.error(f"full: {bench_flag} requires {blobs_flag}")
 
     if getattr(args, "report_drift", False) and args.fold_batch_id is None:
@@ -788,13 +788,8 @@ def main(argv: list[str] | None = None) -> int:
         langid_models, _, langid_fill_hist = load_langid_model(
             args.langid_model
         )
-    blobs: dict = {}
-    bench_blobs: dict = {}
-    for m in MODALITIES.values():
-        for frames, flag in ((blobs, f"--{m.name}-blobs"),
-                             (bench_blobs, f"--{m.name}-benchmark")):
-            path = _arg(args, flag)
-            frames[m.name] = spark.read.parquet(path) if path else None
+    blobs = {k: spark.read.parquet(p) for k, p in blob_paths.items()}
+    bench_blobs = {k: spark.read.parquet(p) for k, p in bench_paths.items()}
     bpe_merges = None
     if getattr(args, "bpe_merges", None):
         # frozen merge table (round 17): the daily loop sizes bins
@@ -841,7 +836,10 @@ def main(argv: list[str] | None = None) -> int:
             decon_n=args.decon_n,
             quality_model=frozen_quality,
             bpe_merges=bpe_merges,
-            **_modality_kwargs(args, blobs, bench_blobs, batch=True),
+            blobs=blobs,
+            benchmark_blobs=bench_blobs,
+            backends=backends,
+            index_paths=index_paths,
         )
         return new, out, langid_probe
 
@@ -862,15 +860,13 @@ def main(argv: list[str] | None = None) -> int:
         survivors = new.join(ids, "doc_id")
         build_signature_index(survivors, args.sig, batch_id=fold)
         build_exact_key_index(survivors, args.key, batch_id=fold)
-        for m in MODALITIES.values():
+        for name, path in index_paths.items():
             # tomorrow's batch probes today's survivors' hashes, never
             # their payloads
-            path = _arg(args, _index_flag(m, args.cmd))
-            if blobs[m.name] is not None and path:
+            if name in blobs:
                 build_hash_index(
-                    m.name, blobs[m.name].join(ids, "doc_id"), path,
-                    backend=_arg(args, f"--{m.name}-backend"),
-                    batch_id=fold,
+                    name, blobs[name].join(ids, "doc_id"), path,
+                    backend=backends.get(name), batch_id=fold,
                 )
         append_corpus_batch(survivors, args.corpus, fold)
         if _arg(args, "--shard-root"):
@@ -968,7 +964,9 @@ def main(argv: list[str] | None = None) -> int:
             quality_model_out=args.quality_model_out,
             langid_fill=args.langid_fill,
             langid_model_out=args.langid_model_out,
-            **_modality_kwargs(args, blobs, bench_blobs, batch=False),
+            blobs=blobs,
+            benchmark_blobs=bench_blobs,
+            backends=backends,
             bpe_merges=bpe_merges,
             scrub_pii=args.scrub_pii,
             survivor_policy=args.survivor_policy,
@@ -997,14 +995,13 @@ def main(argv: list[str] | None = None) -> int:
         summary = {"status": "ok", "cmd": "build-index",
                    "sig": args.sig, "key": args.key}
         for m in MODALITIES.values():
-            index_flag = _index_flag(m, args.cmd)
-            if blobs[m.name] is not None:
+            if m.name in blobs:
                 build_hash_index(
-                    m.name, blobs[m.name], _arg(args, index_flag),
-                    backend=_arg(args, f"--{m.name}-backend"),
-                    batch_id=args.batch_id,
+                    m.name, blobs[m.name], index_paths[m.name],
+                    backend=backends.get(m.name), batch_id=args.batch_id,
                 )
-            summary[index_flag[2:].replace("-", "_")] = _arg(args, index_flag)
+            flag = _index_flag(m, args.cmd)
+            summary[flag[2:].replace("-", "_")] = index_paths.get(m.name)
         summary["batch_id"] = args.batch_id
         print(json.dumps(summary))
     elif args.cmd == "compact":
@@ -1282,7 +1279,7 @@ def main(argv: list[str] | None = None) -> int:
         # arrival files, and a batch that crashed mid-fold replays under
         # ITS OWN batch id, converging through the same idempotent
         # partition overwrites the daily loop relies on.
-        _refuse_fold_roots(args)
+        _refuse_fold_roots(args, index_paths)
         schema = spark.read.parquet(args.arrivals).schema
         processed: list[str] = []
 
@@ -1313,7 +1310,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         fold = args.fold_batch_id
         if fold is not None:
-            _refuse_fold_roots(args)
+            _refuse_fold_roots(args, index_paths)
         new, out, langid_probe = _curate(spark.read.parquet(args.new), fold)
         if fold is None:
             manifest = {"kept": write_store(out, args.out)}

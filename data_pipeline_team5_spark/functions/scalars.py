@@ -72,16 +72,6 @@ def revenue_expr() -> Column:
     )
 
 
-def charge_expr() -> Column:
-    """l_extendedprice * (1 - l_discount) * (1 + l_tax), exact decimal."""
-    one = F.lit(1).cast(RATE)
-    return (
-        F.col("l_extendedprice").cast(MONEY)
-        * (one - F.col("l_discount").cast(RATE))
-        * (one + F.col("l_tax").cast(RATE))
-    )
-
-
 def exact_corr(
     n: Column, sx: Column, sy: Column, sxy: Column, sxx: Column, syy: Column
 ) -> Column:
@@ -150,11 +140,4 @@ def dsum_sql(expr: str, alias: str, typ: str = "DECIMAL(18,2)") -> str:
     return (
         f"CAST(CAST(SUM(CAST({expr} AS {typ})) AS STRING) AS DOUBLE)"
         f" AS {alias}"
-    )
-
-
-def davg_sql(expr: str, alias: str, typ: str = "DECIMAL(18,2)") -> str:
-    return (
-        f"(CAST(CAST(SUM(CAST({expr} AS {typ})) AS STRING) AS DOUBLE)"
-        f" / COUNT({expr})) AS {alias}"
     )

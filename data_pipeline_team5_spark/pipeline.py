@@ -415,12 +415,34 @@ def _curation_filter_stage(
     return kept
 
 
+def _modality_args(**dicts: dict | None) -> list[dict]:
+    """The presets' modality-keyed arguments as dicts (None → empty), in
+    the order given. A key that names no row of ``MODALITIES`` raises: a
+    misspelt key would otherwise silently skip that modality's steps.
+    ``backends`` admits only the modalities with decode choices, so a
+    modality with one decoder (audio) cannot be switched to another."""
+    out = []
+    for arg, d in dicts.items():
+        d = d or {}
+        names = sorted(
+            m.name for m in MODALITIES.values()
+            if m.backends or arg != "backends"
+        )
+        for key in d:
+            if key not in names:
+                raise ValueError(
+                    f"{arg}[{key!r}]: unknown modality; the modalities are "
+                    f"{names}"
+                )
+        out.append(d)
+    return out
+
+
 def _modality_decon(
     kept: DataFrame,
-    blobs: dict[str, DataFrame | None],
-    bench_blobs: dict[str, DataFrame | None],
+    blobs: dict[str, DataFrame],
+    bench_blobs: dict[str, DataFrame],
     backends: dict[str, str],
-    batch: bool,
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """Payload decontamination for both presets, one pass per modality
     with benchmark blobs: the kept pool's payloads decode ONCE into a
@@ -429,25 +451,19 @@ def _modality_decon(
     the 5-gram rule, at the same early stage (eval overlap must never
     reach training bins). Returns the filtered pool and the pinned
     tables, which the dedup stage reuses (:func:`_pool_hashes`) so
-    turning decon on never adds a second decode pass. ``batch`` picks
-    the incremental preset's names for the error message."""
+    turning decon on never adds a second decode pass."""
     from data_pipeline_team5_spark.operators.multimodal import (
         contaminated_image_ids,
     )
 
-    caller, side, whose = (
-        ("curate_incremental_batch", "new_", "the batch's")
-        if batch
-        else ("curate_training_data", "", "the corpus side's")
-    )
     decoded: dict[str, DataFrame] = {}
     for m in MODALITIES.values():
-        if bench_blobs[m.name] is None:
+        if m.name not in bench_blobs:
             continue
-        if blobs[m.name] is None:
+        if m.name not in blobs:
             raise ValueError(
-                f"{caller}: benchmark_{m.name}_blobs requires "
-                f"{side}{m.name}_blobs ({whose} {m.noun})"
+                f'benchmark_blobs["{m.name}"] requires blobs["{m.name}"] '
+                f"(the {m.noun} to decontaminate)"
             )
         backend = backends.get(m.name, m.backend)
         pool = m.hashes(
@@ -467,7 +483,7 @@ def _modality_decon(
 
 def _pool_hashes(
     m: Modality,
-    blobs: dict[str, DataFrame | None],
+    blobs: dict[str, DataFrame],
     decoded: dict[str, DataFrame],
     pool: DataFrame,
     backends: dict[str, str],
@@ -531,7 +547,7 @@ def _exact_dedup(
 def _payload_pairs(
     pairs: DataFrame,
     uniq: DataFrame,
-    blobs: dict[str, DataFrame | None],
+    blobs: dict[str, DataFrame],
     decoded: dict[str, DataFrame],
     backends: dict[str, str],
     indexes: dict[str, DataFrame] | None = None,
@@ -550,7 +566,7 @@ def _payload_pairs(
     )
 
     for m in MODALITIES.values():
-        if blobs[m.name] is None or (
+        if m.name not in blobs or (
             indexes is not None and m.name not in indexes
         ):
             continue
@@ -657,16 +673,11 @@ def curate_training_data(
     quality_classifier_per_lang: bool = False,
     lm_reference_docs: DataFrame | None = None,
     quality_model_out: str | None = None,
-    image_blobs: DataFrame | None = None,
-    benchmark_image_blobs: DataFrame | None = None,
-    image_backend: str = "bmp",
+    blobs: dict[str, DataFrame] | None = None,
+    benchmark_blobs: dict[str, DataFrame] | None = None,
+    backends: dict[str, str] | None = None,
     langid_fill: bool = False,
     langid_model_out: str | None = None,
-    audio_blobs: DataFrame | None = None,
-    benchmark_audio_blobs: DataFrame | None = None,
-    video_blobs: DataFrame | None = None,
-    benchmark_video_blobs: DataFrame | None = None,
-    video_backend: str = "container",
     bpe_merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The end-to-end training-data curation a 100 TB corpus run ships,
@@ -737,22 +748,27 @@ def curate_training_data(
     driver-local temp dir is used (local mode only). Intermediate edge
     lists are deleted after the labels write either way.
 
-    **Modalities.** Each row of ``operators/multimodal.py:MODALITIES``
-    (image, audio, video) adds three optional kwargs:
-    ``<m>_blobs``, a (doc_id, blob) frame of the corpus's payloads;
-    ``benchmark_<m>_blobs``, the eval benchmark's payloads; and, where
-    the table lists decode choices, ``<m>_backend``. With a benchmark,
-    docs whose payload is within the table's ``max_hamming`` of any
-    benchmark payload drop right after stage 1 (decontamination). With
-    blobs, the payloads' perceptual near-dup pairs (the capped banded
-    dHash join; the cap is correct here, where clusters, not pair
-    lists, are consumed) union into the text pair graph before stage 3,
-    so payload duplicates collapse under the same survivor policy. Each
-    modality decodes once: the decon stage's pinned 2-longs/doc hash
-    table is reused by the dedup stage.
+    **Modalities.** ``blobs``, ``benchmark_blobs`` and ``backends`` are
+    dicts keyed by the names of ``operators/multimodal.py:MODALITIES``
+    (image, audio, video); an unknown key raises. ``blobs[m]`` is a
+    (doc_id, blob) frame of the corpus's payloads, ``benchmark_blobs[m]``
+    the eval benchmark's payloads (it requires ``blobs[m]``), and
+    ``backends[m]`` a decode backend (the table's default when absent).
+    With a benchmark, docs whose payload is within the table's
+    ``max_hamming`` of any benchmark payload drop right after stage 1
+    (decontamination). With blobs, the payloads' perceptual near-dup
+    pairs (the capped banded dHash join; the cap is correct here, where
+    clusters, not pair lists, are consumed) union into the text pair
+    graph before stage 3, so payload duplicates collapse under the same
+    survivor policy. Each modality decodes once: the decon stage's
+    pinned 2-longs/doc hash table is reused by the dedup stage.
     """
     from data_pipeline_team5_spark.operators.components import (
         connected_components,
+    )
+
+    blobs, benchmark_blobs, backends = _modality_args(
+        blobs=blobs, benchmark_blobs=benchmark_blobs, backends=backends
     )
 
     # 0-langid. optional MODEL-BASED language-ID fill (the CCNet first
@@ -810,17 +826,7 @@ def curate_training_data(
     )
 
     # 1a. optional payload decontamination, one pass per modality
-    blobs = {"image": image_blobs, "audio": audio_blobs,
-             "video": video_blobs}
-    backends = {"image": image_backend, "video": video_backend}
-    kept, decoded = _modality_decon(
-        kept,
-        blobs,
-        {"image": benchmark_image_blobs, "audio": benchmark_audio_blobs,
-         "video": benchmark_video_blobs},
-        backends,
-        batch=False,
-    )
+    kept, decoded = _modality_decon(kept, blobs, benchmark_blobs, backends)
 
     # 1b. optional MODEL-BASED quality filters (operators/quality.py —
     # the CCNet two-signal stack), applied to the filtered pool BEFORE
@@ -1080,17 +1086,10 @@ def curate_incremental_batch(
     bench_gram_count: int | None = None,
     decon_n: int = 5,
     quality_model: dict | None = None,
-    new_image_blobs: DataFrame | None = None,
-    perceptual_index_path: str | None = None,
-    benchmark_image_blobs: DataFrame | None = None,
-    image_backend: str = "bmp",
-    new_audio_blobs: DataFrame | None = None,
-    audio_index_path: str | None = None,
-    benchmark_audio_blobs: DataFrame | None = None,
-    new_video_blobs: DataFrame | None = None,
-    video_index_path: str | None = None,
-    benchmark_video_blobs: DataFrame | None = None,
-    video_backend: str = "container",
+    blobs: dict[str, DataFrame] | None = None,
+    benchmark_blobs: dict[str, DataFrame] | None = None,
+    backends: dict[str, str] | None = None,
+    index_paths: dict[str, str] | None = None,
     bpe_merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Daily curation update: run the full curation contract for a NEW
@@ -1147,25 +1146,32 @@ def curate_incremental_batch(
     ``scratch_dir``: forwarded to the component step (see
     :func:`curate_training_data` — same conf fallback and cleanup).
 
-    **Modalities.** Each row of ``operators/multimodal.py:MODALITIES``
-    (image, audio, video) adds ``new_<m>_blobs`` (the batch's
-    payloads), ``<index>_index_path`` (the stored hash index built by
-    ``build_<index>_index``: ``perceptual_index_path`` for images),
-    ``benchmark_<m>_blobs`` and, where the table lists decode choices,
-    ``<m>_backend``. The batch's payloads decode ONCE, restricted to
-    docs still kept; decontamination runs at the full run's stage, and
-    the batch's hashes probe the stored index, so the retained corpus's
-    payloads are never decoded again. Probe pairs union into the same
-    component graph, so the component-level drop rule covers every
-    modality. Blobs need the index, or a benchmark for a decon-only run:
-    a recompute fallback would need the CORPUS's blobs, which this path
-    never reads. ``exclude_batch_id`` prunes the hash indexes too.
+    **Modalities.** ``blobs`` (the batch's payloads), ``benchmark_blobs``,
+    ``backends`` and ``index_paths`` are dicts keyed by the names of
+    ``operators/multimodal.py:MODALITIES`` (image, audio, video), as in
+    :func:`curate_training_data`; ``index_paths[m]`` is the stored hash
+    index built by ``build_hash_index(m, …)`` (``build_<index>_index``).
+    The batch's payloads decode ONCE, restricted to docs still kept;
+    decontamination runs at the full run's stage, and the batch's hashes
+    probe the stored index, so the retained corpus's payloads are never
+    decoded again. Probe pairs union into the same component graph, so
+    the component-level drop rule covers every modality. Blobs need the
+    index, or a benchmark for a decon-only run: a recompute fallback
+    would need the CORPUS's blobs, which this path never reads.
+    ``exclude_batch_id`` prunes the hash indexes too.
     """
     from data_pipeline_team5_spark.operators.components import (
         connected_components,
     )
     from data_pipeline_team5_spark.operators.dedup import (
         PRODUCTION_MAX_BUCKET,
+    )
+
+    blobs, benchmark_blobs, backends, index_paths = _modality_args(
+        blobs=blobs,
+        benchmark_blobs=benchmark_blobs,
+        backends=backends,
+        index_paths=index_paths,
     )
 
     # 1. filter the new batch (corpus is already curated — untouched);
@@ -1195,33 +1201,23 @@ def curate_incremental_batch(
         kept = apply_frozen_quality_model(kept, quality_model)
 
     # 1a. optional payload decontamination, one pass per modality
-    blobs = {"image": new_image_blobs, "audio": new_audio_blobs,
-             "video": new_video_blobs}
-    bench_blobs = {"image": benchmark_image_blobs,
-                   "audio": benchmark_audio_blobs,
-                   "video": benchmark_video_blobs}
-    backends = {"image": image_backend, "video": video_backend}
-    kept, decoded = _modality_decon(
-        kept, blobs, bench_blobs, backends, batch=True
-    )
+    kept, decoded = _modality_decon(kept, blobs, benchmark_blobs, backends)
     # each modality with blobs probes its stored hash index; without one
     # it is decon-only, which needs a benchmark
     spark = new_docs.sparkSession
-    index_paths = {"image": perceptual_index_path,
-                   "audio": audio_index_path, "video": video_index_path}
     indexes: dict[str, DataFrame] = {}
     for m in MODALITIES.values():
-        path = index_paths[m.name]
-        if blobs[m.name] is None or (
-            path is None and bench_blobs[m.name] is not None
+        path = index_paths.get(m.name)
+        if m.name not in blobs or (
+            path is None and m.name in benchmark_blobs
         ):
             continue
         if path is None:
             raise ValueError(
-                f"curate_incremental_batch: new_{m.name}_blobs requires "
-                f"{m.index}_index_path (build_{m.index}_index) — the "
+                f'curate_incremental_batch: blobs["{m.name}"] requires '
+                f'index_paths["{m.name}"] (build_{m.index}_index) — the '
                 f"daily loop never re-decodes the retained corpus's "
-                f"{m.noun} — and/or benchmark_{m.name}_blobs (decon-only)"
+                f'{m.noun} — and/or benchmark_blobs["{m.name}"] (decon-only)'
             )
         indexes[m.name] = read_store(spark, path, exclude_batch_id).select(
             "doc_id", "dhash", "ahash"

@@ -251,11 +251,11 @@ def mm_perceptual_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "passes the production cap (PERCEPTUAL_MAX_BUCKET — the operator "
     "default), which is CORRECT at the cluster grain: a viral image's "
     "component still forms through its surviving within-cap pairs. "
-    "Pipeline twin: curate_training_data(image_blobs=…) unions these "
-    "pairs into the text component graph so min_id/quality/source_rank "
-    "retention covers images too; daily twin: "
-    "curate_incremental_batch(new_image_blobs=…, "
-    "perceptual_index_path=…) probes the stored 2-longs/doc hash index "
+    "Pipeline twin: curate_training_data(blobs={'image': …}) unions "
+    "these pairs into the text component graph so min_id/quality/"
+    "source_rank retention covers images too; daily twin: "
+    "curate_incremental_batch(blobs={'image': …}, "
+    "index_paths={'image': …}) probes the stored 2-longs/doc hash index "
     "without re-decoding the corpus. Hash table checkpoint-pinned "
     "(single decode pass, the mm_perceptual_neardup convention).",
     tags=("multimodal", "dedup", "perceptual", "components"),
@@ -384,8 +384,8 @@ MM_DECON_BENCH_MOD = 13  # fixture benchmark slice (disjoint sides by
     "exact, recall guaranteed for ≤ blocks − combo. Corpus images "
     "decode ONCE into the pinned 2-longs/doc hash table (the stored "
     "perceptual index plugs in unchanged for the daily loop). Drop "
-    "rule deploys via curate_training_data(benchmark_image_blobs=…) / "
-    "CLI --image-benchmark.",
+    "rule deploys via curate_training_data(benchmark_blobs={'image': "
+    "…}) / CLI --image-benchmark.",
     tags=("multimodal", "decontamination", "perceptual"),
 )
 def mm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

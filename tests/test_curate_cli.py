@@ -631,17 +631,27 @@ def test_cli_drift_between_fold_days(spark, tmp_path, capsys):
 
 def test_cli_full_survivor_policy_flag(spark, tmp_path, capsys):
     """`curate full --survivor-policy quality` threads the round-9
-    retention policy through the CLI (same kept count as the default —
-    one survivor per component either way)."""
-    docs, paths = _days(spark, tmp_path)
+    retention policy through the CLI: on the crafted near-dup case
+    (where ``min_id`` and ``quality`` keep different members of one
+    component) the two runs write the same kept count but different
+    doc_id sets."""
+    from tests.test_training_curation import _quality_divergence_docs
+
+    docs, donor_id, new_id = _quality_divergence_docs(spark)
+    src = str(tmp_path / "docs.parquet")
+    docs.write.parquet(src)
     out_a = str(tmp_path / "a.parquet")
     out_b = str(tmp_path / "b.parquet")
-    ra = _run(capsys, ["full", "--docs", paths["day0"], "--out", out_a])
-    rb = _run(capsys, ["full", "--docs", paths["day0"], "--out", out_b,
+    ra = _run(capsys, ["full", "--docs", src, "--out", out_a])
+    rb = _run(capsys, ["full", "--docs", src, "--out", out_b,
                        "--survivor-policy", "quality"])
     assert ra["kept"] == rb["kept"] > 0
     # `kept` is observed on the output write: the rows actually written
     assert ra["kept"] == spark.read.parquet(out_a).count()
+    ids_a = {r["doc_id"] for r in spark.read.parquet(out_a).collect()}
+    ids_b = {r["doc_id"] for r in spark.read.parquet(out_b).collect()}
+    assert ids_a != ids_b
+    assert donor_id in ids_a and new_id in ids_b
 
 
 def test_cli_incremental_report_drift(spark, tmp_path, capsys):

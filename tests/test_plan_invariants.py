@@ -53,9 +53,26 @@ def _unpartitioned_windows(df) -> list[str]:
     return hits
 
 
+@pytest.fixture(scope="module")
+def built(spark):
+    """``built(name)``: the catalog query's DataFrame, built on first use
+    and shared by every sweep in this module — they read the same plans,
+    so a second build would only repeat the query's construction work
+    (its eager jobs and pins)."""
+    cache: dict = {}
+
+    def get(name: str):
+        if name not in cache:
+            cache[name] = QUERIES[name].fn(spark, SF_SMALL)
+        return cache[name]
+
+    yield get
+    cache.clear()
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_plan_has_no_scale_killers(name, spark):
-    df = QUERIES[name].fn(spark, SF_SMALL)
+def test_plan_has_no_scale_killers(name, built):
+    df = built(name)
     plan = df._jdf.queryExecution().executedPlan().toString()
     for op in FORBIDDEN:
         assert op not in plan, f"{name}: {op} in physical plan"
@@ -101,11 +118,11 @@ def test_source_dup_report_single_corpus_exchange(spark):
     )
 
 
-def test_global_window_allowlist_is_exact(spark):
+def test_global_window_allowlist_is_exact(built):
     """Every allowlisted name must actually plan an unpartitioned window
     — a stale entry would silently re-open the loophole the sweep closes."""
     for name in sorted(GLOBAL_WINDOW_ALLOWED):
-        df = QUERIES[name].fn(spark, SF_SMALL)
+        df = built(name)
         assert _unpartitioned_windows(df), (
             f"{name}: allowlisted but plans no unpartitioned window — "
             "remove it from GLOBAL_WINDOW_ALLOWED"
@@ -257,10 +274,10 @@ SCANLESS_RESULT_PLANS = {
 }
 
 
-def test_scanless_result_plans_are_exactly_the_known_set(spark):
+def test_scanless_result_plans_are_exactly_the_known_set(built):
     scanless = set()
-    for name, q in QUERIES.items():
-        df = q.fn(spark, SF_SMALL)
+    for name in QUERIES:
+        df = built(name)
         plan = df._jdf.queryExecution().executedPlan().toString()
         if "FileScan" not in plan and "Scan parquet" not in plan:
             scanless.add(name)

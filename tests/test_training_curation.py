@@ -360,27 +360,18 @@ def test_incremental_batch_curation_invariants(spark):
     assert again == rows
 
 
-def test_survivor_policy_quality_keeps_cleanest_per_group(spark):
-    """survivor_policy='quality' (round 9): same number of survivors as
-    the min-id default (one per near-dup component over the identical
-    guarded pair set), but membership diverges on the fixture — the
-    kept representative is the component's highest-quality doc, not its
-    smallest id. Unknown policies refuse loudly."""
-    import pytest as _pytest
+def _quality_divergence_docs(spark):
+    """(docs, donor_id, new_id): the sf0.01 documents plus a crafted
+    HIGHER-QUALITY near-dup of a surviving doc under a LARGER id, the
+    case where the ``min_id`` and ``quality`` survivor policies keep
+    different members of one component.
 
-    from data_pipeline_team5_spark.pipeline import curate_training_data
-    from data_pipeline_team5_spark.plans.catalog import table
-    from tests.conftest import SF_SMALL
-
-    from pyspark.sql import functions as F
-
+    The fixture's near-dup groups are near-IDENTICAL copies, so their
+    quality scores tie and the quality argmax tie-breaks to the min id
+    — both policies agree. The crafted copy is the same text plus
+    distinct new tokens (longer and more unique → strictly higher
+    quality; ~80% shared shingles keeps it one component)."""
     base = table(spark, SF_SMALL, "documents")
-    # The fixture's near-dup groups are near-IDENTICAL copies, so their
-    # quality scores tie and the quality argmax tie-breaks to the min id
-    # — both policies agree. Craft the divergence case instead: a HIGHER-
-    # QUALITY near-dup of a surviving doc under a LARGER id (same text
-    # plus distinct new tokens → longer and more unique → strictly higher
-    # quality; ~80% shared shingles keeps it one component).
     surv = {
         r["doc_id"]
         for r in curate_training_data(base).select("doc_id").collect()
@@ -405,15 +396,28 @@ def test_survivor_policy_quality_keeps_cleanest_per_group(spark):
         ["doc_id", "lang", "n_chars", "source", "text"],
     )
     docs = base.unionByName(crafted.select(*base.columns))
+    return docs, donor["doc_id"], new_id
 
+
+def test_survivor_policy_quality_keeps_cleanest_per_group(spark):
+    """survivor_policy='quality': same number of survivors as
+    the min-id default (one per near-dup component over the identical
+    guarded pair set), but membership diverges on the crafted case —
+    the kept representative is the component's highest-quality doc, not
+    its smallest id. Unknown policies refuse loudly."""
+    import pytest as _pytest
+
+    from data_pipeline_team5_spark.pipeline import curate_training_data
+
+    docs, donor_id, new_id = _quality_divergence_docs(spark)
     a = curate_training_data(docs)
     b = curate_training_data(docs, survivor_policy="quality")
     ids_a = {r["doc_id"] for r in a.select("doc_id").collect()}
     ids_b = {r["doc_id"] for r in b.select("doc_id").collect()}
     assert len(ids_a) == len(ids_b), "one survivor per component either way"
     # min-id keeps the original; quality keeps the longer crafted copy
-    assert donor["doc_id"] in ids_a and new_id not in ids_a
-    assert new_id in ids_b and donor["doc_id"] not in ids_b
+    assert donor_id in ids_a and new_id not in ids_a
+    assert new_id in ids_b and donor_id not in ids_b
     with _pytest.raises(ValueError, match="survivor_policy"):
         curate_training_data(docs, survivor_policy="longest")
 
@@ -699,11 +703,42 @@ def _dissimilar_docs(spark, ids):
     )
 
 
+def test_presets_take_modality_keyed_dicts(spark):
+    """The presets' per-modality arguments are dicts keyed by the
+    modality table: no parameter names a modality or a stored-index
+    stem, and a misspelt key raises (naming it and the modalities)
+    instead of silently skipping that modality's steps."""
+    import inspect
+
+    import pytest as _pytest
+
+    from data_pipeline_team5_spark.operators.multimodal import MODALITIES
+    from data_pipeline_team5_spark.pipeline import curate_incremental_batch
+
+    stems = set(MODALITIES) | {m.index for m in MODALITIES.values()}
+    for preset in (curate_training_data, curate_incremental_batch):
+        for name in inspect.signature(preset).parameters:
+            assert not any(s in name for s in stems), (preset.__name__, name)
+
+    docs = _dissimilar_docs(spark, [1])
+    blobs = spark.createDataFrame(
+        [(1, _bmp_payload("noise"))], "doc_id LONG, blob BINARY"
+    )
+    with _pytest.raises(ValueError, match="imgae") as err:
+        curate_training_data(docs, blobs={"imgae": blobs})
+    assert str(sorted(MODALITIES)) in str(err.value)
+    with _pytest.raises(ValueError, match="imgae"):
+        curate_incremental_batch(docs, docs, blobs={"imgae": blobs})
+    # audio has one decoder: backends admits only image and video
+    with _pytest.raises(ValueError, match=r"backends\['audio'\]"):
+        curate_training_data(docs, backends={"audio": "fake"})
+
+
 def test_curate_image_dedup_collapses_image_duplicates(spark):
     """Round 15 (VERDICT r14 #1): docs whose texts share nothing but
     whose image payloads are perceptual duplicates must collapse into
-    one component under curate_training_data(image_blobs=...), with the
-    min-id member surviving; without image_blobs all survive."""
+    one component under curate_training_data(blobs={"image": ...}), with
+    the min-id member surviving; without image blobs all survive."""
     docs = _dissimilar_docs(spark, [1, 2, 3])
     base = {r["doc_id"] for r in curate_training_data(docs).collect()}
     assert base == {1, 2, 3}  # precondition: no text dedup fires
@@ -718,13 +753,13 @@ def test_curate_image_dedup_collapses_image_duplicates(spark):
     )
     out = {
         r["doc_id"]
-        for r in curate_training_data(docs, image_blobs=blobs).collect()
+        for r in curate_training_data(docs, blobs={"image": blobs}).collect()
     }
     assert out == {1, 3}  # 2 lost the image component to min-id 1
     # determinism
     again = {
         r["doc_id"]
-        for r in curate_training_data(docs, image_blobs=blobs).collect()
+        for r in curate_training_data(docs, blobs={"image": blobs}).collect()
     }
     assert again == out
 
@@ -766,14 +801,14 @@ def test_incremental_image_dedup_probes_stored_index(spark, tmp_path):
         for r in curate_incremental_batch(
             new,
             corpus,
-            new_image_blobs=new_blobs,
-            perceptual_index_path=idx,
+            blobs={"image": new_blobs},
+            index_paths={"image": idx},
         ).collect()
     }
     assert out == {3, 4}  # 2's image matches retained 1000 → dropped
 
-    with _pytest.raises(ValueError, match="perceptual_index_path"):
-        curate_incremental_batch(new, corpus, new_image_blobs=new_blobs)
+    with _pytest.raises(ValueError, match=r'index_paths\["image"\]'):
+        curate_incremental_batch(new, corpus, blobs={"image": new_blobs})
 
 
 def test_quality_model_provenance_and_hist_roundtrip(spark, tmp_path):
@@ -895,18 +930,18 @@ def test_curate_image_decontamination_drops_benchmark_matches(spark):
     )
     base = {
         r["doc_id"]
-        for r in curate_training_data(docs, image_blobs=blobs).collect()
+        for r in curate_training_data(docs, blobs={"image": blobs}).collect()
     }
     assert base == {1, 2, 3}
     out = {
         r["doc_id"]
         for r in curate_training_data(
-            docs, image_blobs=blobs, benchmark_image_blobs=bench
+            docs, blobs={"image": blobs}, benchmark_blobs={"image": bench}
         ).collect()
     }
     assert out == {1, 3}  # 2's image matches the benchmark
-    with _pytest.raises(ValueError, match="requires image_blobs"):
-        curate_training_data(docs, benchmark_image_blobs=bench)
+    with _pytest.raises(ValueError, match=r'requires blobs\["image"\]'):
+        curate_training_data(docs, benchmark_blobs={"image": bench})
 
     # incremental decon-only form (no stored index): same rule
     from data_pipeline_team5_spark.pipeline import (
@@ -918,7 +953,7 @@ def test_curate_image_decontamination_drops_benchmark_matches(spark):
         r["doc_id"]
         for r in curate_incremental_batch(
             docs, corpus,
-            new_image_blobs=blobs, benchmark_image_blobs=bench,
+            blobs={"image": blobs}, benchmark_blobs={"image": bench},
         ).collect()
     }
     assert inc == {1, 3}
@@ -1029,7 +1064,7 @@ def _wav_payload(kind: str) -> bytes:
 def test_curate_audio_dedup_collapses_audio_duplicates(spark):
     """Round 16 (VERDICT r15 #5's pipeline leg): docs whose texts share
     nothing but whose AUDIO payloads are perceptual duplicates collapse
-    into one component under curate_training_data(audio_blobs=...),
+    into one component under curate_training_data(blobs={"audio": ...}),
     min-id surviving — the image contract, third modality."""
     docs = _dissimilar_docs(spark, [1, 2, 3])
     base = {r["doc_id"] for r in curate_training_data(docs).collect()}
@@ -1045,12 +1080,12 @@ def test_curate_audio_dedup_collapses_audio_duplicates(spark):
     )
     out = {
         r["doc_id"]
-        for r in curate_training_data(docs, audio_blobs=blobs).collect()
+        for r in curate_training_data(docs, blobs={"audio": blobs}).collect()
     }
     assert out == {1, 3}
     again = {
         r["doc_id"]
-        for r in curate_training_data(docs, audio_blobs=blobs).collect()
+        for r in curate_training_data(docs, blobs={"audio": blobs}).collect()
     }
     assert again == out
 
@@ -1086,13 +1121,13 @@ def test_incremental_audio_dedup_probes_stored_index(spark, tmp_path):
         for r in curate_incremental_batch(
             new,
             corpus,
-            new_audio_blobs=new_blobs,
-            audio_index_path=idx,
+            blobs={"audio": new_blobs},
+            index_paths={"audio": idx},
         ).collect()
     }
     assert out == {3, 4}  # 2's audio duplicates retained 1000
-    with _pytest.raises(ValueError, match="audio_index_path"):
-        curate_incremental_batch(new, corpus, new_audio_blobs=new_blobs)
+    with _pytest.raises(ValueError, match=r'index_paths\["audio"\]'):
+        curate_incremental_batch(new, corpus, blobs={"audio": new_blobs})
 
 
 def test_curate_audio_decontamination(spark):
@@ -1121,12 +1156,12 @@ def test_curate_audio_decontamination(spark):
     out = {
         r["doc_id"]
         for r in curate_training_data(
-            docs, audio_blobs=blobs, benchmark_audio_blobs=bench
+            docs, blobs={"audio": blobs}, benchmark_blobs={"audio": bench}
         ).collect()
     }
     assert out == {1, 3}  # 2 is benchmark-contaminated
-    with _pytest.raises(ValueError, match="requires audio_blobs"):
-        curate_training_data(docs, benchmark_audio_blobs=bench)
+    with _pytest.raises(ValueError, match=r'requires blobs\["audio"\]'):
+        curate_training_data(docs, benchmark_blobs={"audio": bench})
 
     # incremental decon-only (no stored index needed)
     corpus = _dissimilar_docs(spark, [1000])
@@ -1134,9 +1169,9 @@ def test_curate_audio_decontamination(spark):
         r["doc_id"]
         for r in curate_incremental_batch(
             docs, corpus,
-            new_audio_blobs=blobs, benchmark_audio_blobs=bench,
+            blobs={"audio": blobs}, benchmark_blobs={"audio": bench},
         ).collect()
     }
     assert inc == {1, 3}
-    with _pytest.raises(ValueError, match="audio_index_path"):
-        curate_incremental_batch(docs, corpus, new_audio_blobs=blobs)
+    with _pytest.raises(ValueError, match=r'index_paths\["audio"\]'):
+        curate_incremental_batch(docs, corpus, blobs={"audio": blobs})
